@@ -15,6 +15,8 @@ _HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _HERE)
 sys.path.insert(0, os.path.join(_HERE, "scripts"))
 
+from lours_spark.suite import ALL_QUERIES  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: a new BENCH_FULL.json only replaces the committed one when its
@@ -80,139 +82,12 @@ def _ann_params() -> dict:
         },
     }
 
-#: headline queries: the TPC-H-style relational core + the heavy
-#: training-data-pipeline operators (dedup, ANN, windows, matcher)
-BENCH_QUERIES = [
-    "pricing_summary",
-    "shipping_priority",
-    "local_supplier_volume",
-    "revenue_forecast",
-    "filter_images_semijoin",
-    "reset_index",
-    "diff_three_way",
-    "iou_pairs",
-    "pr_curve",
-    "confusion_matrix",
-    "hash_split",
-    "atomic_chunks",
-    "fingerprint_dedup",
-    "minhash_lsh_pairs",
-    # round 7: incremental (index-vs-new-batch) LSH mining
-    "minhash_incremental",
-    "ngram_jaccard",
-    "simhash",
-    "bpe_token_count",
-    "tfidf_top_term",
-    "cosine_topk",
-    "lsh_bucket_topk",
-    "embedding_near_dup",
-    "sessionize",
-    "hourly_rollup",
-    "greedy_matching",
-    "matcher_skew",
-    "minhash_hot_bucket",
-    # round 9: star-mode twin — capped mega-family still collapses
-    "minhash_hot_bucket_star",
-    "detection_pr_ap",
-    # round 8: vocabulary induction, weighted sampling, z-order layout
-    "vocab_pair_stats",
-    "weighted_sample",
-    "zorder_layout",
-    "boilerplate_removal",
-    "classifier_score",
-    "embedding_incremental",
-    # round 2: every formerly-ungated facet is timed too, so the bench
-    # covers what the gate covers
-    "keep_classes",
-    "validation_counts",
-    "bbox_validity_report",
-    "simple_split",
-    "split_quality",
-    "take_images",
-    "merge_overlap_id_shift",
-    "confusion_pivot",
-    "pr_curve_collapsed",
-    "salted_aggregate",
-    "top_terms",
-    "dedup_clusters",
-    # round 6 (cont.): training-order + curation additions
-    "global_shuffle",
-    "cap_per_group",
-    "quality_percentile",
-    "semantic_dedup",
-    "dup_spans",
-    "remove_dup_spans",
-    "cluster_representatives",
-    "normalize_text",
-    "decontaminate_spans",
-    "gopher_rules",
-    "char_entropy",
-    "ngram_logprob",
-    "bloom_novel",
-    "asof_join",
-    "range_join",
-    "rolling_agg",
-    "funnel",
-    # round 2: curation operators
-    "decontaminate",
-    "repetition_signals",
-    "stratified_sample",
-    # round 3: PII detection/redaction (codegen'd regexp pass) +
-    # global paragraph-level dedup (Dolma-style)
-    "pii_signals",
-    "paragraph_dedup",
-    "table_profile",
-    # round 2: complete facet coverage — every standalone gate facet is
-    # timed, so BENCH covers exactly what the CORRECTNESS gate covers
-    "filter_annotations_emptied",
-    "remove_empty_images",
-    "anti_join_orphans",
-    "denormalize_category",
-    "remap_classes",
-    "remap_dense_rank",
-    "match_index",
-    "merge_datasets",
-    "booleanize",
-    "debooleanize",
-    "bbox_import_cxcywh",
-    "bbox_export_xyxy",
-    "bbox_relative",
-    "cap_bbox",
-    "average_precision",
-    "interpolated_precision",
-    "crowd_count_error",
-    "balanced_split",
-    # round 5: opt-in bounded-driver approximate greedy (scale path)
-    "balanced_split_approx",
-    "token_count",
-    "language_id",
-    "quality_score",
-    "minhash_signature",
-    "knn_label",
-    "ivf_topk",
-    "json_extraction",
-    "forward_fill",
-    "resample_count",
-    "grouper_bins",
-    "multimodal_features",
-    # round 3: scale evidence — the forced-distributed CC path (same
-    # result as dedup_clusters, min-label propagation instead of the
-    # driver union-find the hybrid picks at this edge count)
-    "dedup_clusters_distributed",
-    # round 6: sequence packing + domain-mixture reweighting
-    "pack_chunked",
-    "pack_greedy",
-    "mixture_weights",
-    # round 6 (cont.): the composed end-to-end curation chain
-    "curation_pipeline",
-    # round 11: JSONL corpus round-trip (write_jsonl -> read_jsonl)
-    "jsonl_roundtrip",
-]
+#: every suite query, timed in registry order (see lours_spark.suite.REGISTRY)
+BENCH_QUERIES = list(ALL_QUERIES)
 
 
 def main() -> None:
     from lours_spark.session import get_spark
-    from lours_spark.suite import ALL_QUERIES as QUERIES
 
     spark = get_spark("lours-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -292,7 +167,7 @@ def main() -> None:
     host_calm = _calm(cal_spark, cal_numpy)
 
     def run_once(name: str) -> tuple[float, int]:
-        fn = QUERIES[name]
+        fn = ALL_QUERIES[name]
         t0 = time.time()
         df = fn(spark, SF_DIR)
         n = df.count()
@@ -469,20 +344,18 @@ def stdout_line(value: float, sf, timings: dict[str, float]) -> str:
     # line still does not fit. The count key keeps its historical name
     # so the driver's round-over-round diff sees no key change.
     kept = dict(centis)
-    omitted = 0
-    for name in STDOUT_SHED_FIRST:
-        if kept.pop(name, None) is not None:
-            omitted += 1
-    by_speed = sorted(kept, key=lambda k: (timings[k], k))
-    for name in by_speed:
-        if len(render({**kept, "omitted_fastest": omitted}, "centisec")) <= 1980:
+    n_stable = sum(kept.pop(name, None) is not None for name in STDOUT_SHED_FIRST)
+    n_fastest = 0
+    for name in sorted(kept, key=lambda k: (timings[k], k)):
+        total = n_stable + n_fastest
+        if len(render({**kept, "omitted_fastest": total}, "centisec")) <= 1980:
             break
         kept.pop(name)
-        omitted += 1
-    kept["omitted_fastest"] = omitted
+        n_fastest += 1
+    kept["omitted_fastest"] = n_stable + n_fastest
     print(
-        f"# bench stdout line overflow: omitting {omitted} stable-tail "
-        "queries from stdout — see BENCH_FULL.json",
+        f"# bench stdout line overflow: omitting {n_stable} stable-tail and "
+        f"{n_fastest} fastest queries from stdout — see BENCH_FULL.json",
         file=sys.stderr,
     )
     return render(kept, "centisec")

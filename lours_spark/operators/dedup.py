@@ -34,13 +34,6 @@ from lours_spark.functions import vectors as V
 from lours_spark.operators._materialize import materialize  # noqa: E402
 from lours_spark.operators._widen import widen as _widen  # noqa: E402
 
-#: semantic_dedup measurement seam (r12): eagerly materialize the
-#: assignment frame before its three consumer legs. Default False —
-#: measured a regression at both sf0.1 and sf1 (see
-#: OPTIMIZATION_r12.md); flip per-session only for corpora where one
-#: materialization demonstrably beats 3× assignment.
-_SD_EAGER_ASSIGNED = False
-
 
 def exact_duplicates(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
@@ -1711,17 +1704,9 @@ def semantic_dedup(
             model = km.fit(feats)
         assigned = model.transform(feats).drop("__sd_features")
 
-    # NOTE (r11/r12): assigned feeds three legs (both pair-join sides
-    # + the dup-mark rejoin), so the assignment re-evaluates per leg.
-    # An eager materialization here was MEASURED as a regression at
-    # BOTH scales — sf0.1 1.18s → 1.52s (r11), sf1 paired A/B 0.848s →
-    # 1.043s min-of-3 (r12) — so no size gate is justified by any
-    # measured point: a literal-array argmin is too cheap to beat one
-    # materialization job even at 10× rows. _SD_EAGER_ASSIGNED stays
-    # as the measurement seam for corpora orders of magnitude past
-    # that (see OPTIMIZATION_r12.md, VERDICT item 7).
-    if _SD_EAGER_ASSIGNED:
-        assigned = materialize(assigned, eager=True)
+    # assigned feeds three legs (both pair-join sides + the dup-mark
+    # rejoin) and is deliberately not materialized: a literal-array
+    # argmin is cheaper to re-run per leg than one materialization job.
     slim = assigned.select(
         F.col(id_col).alias("__sd_id"),
         F.col(vec_col).alias("__sd_v"),

@@ -30,6 +30,7 @@ names map back to their facets:
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -2070,133 +2071,6 @@ def q_detection_pr_ap(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# registry
-# --------------------------------------------------------------------------
-
-QUERIES: dict[str, QueryFn] = {
-    # TPC-H style headliners
-    "pricing_summary": q_pricing_summary,
-    "shipping_priority": q_shipping_priority,
-    "local_supplier_volume": q_local_supplier_volume,
-    "revenue_forecast": q_revenue_forecast,
-    # facade filtering / joins
-    "filter_images_semijoin": q_filter_images_semijoin,
-    "filter_annotations_emptied": q_filter_annotations_emptied,
-    "remove_empty_images": q_remove_empty_images,
-    "anti_join_orphans": q_anti_join_orphans,
-    "denormalize_category": q_denormalize_category,
-    # remap / reindex
-    "remap_classes": q_remap_classes,
-    "remap_dense_rank": q_remap_dense_rank,
-    "reset_index": q_reset_index,
-    "match_index": q_match_index,
-    # merge / diff
-    "merge_datasets": q_merge_datasets,
-    "diff_three_way": q_diff_three_way,
-    # booleanize
-    "booleanize": q_booleanize,
-    "debooleanize": q_debooleanize,
-    # geometry
-    "bbox_import_cxcywh": q_bbox_import_cxcywh,
-    "bbox_export_xyxy": q_bbox_export_xyxy,
-    "bbox_relative": q_bbox_relative,
-    "cap_bbox": q_cap_bbox,
-    "iou_pairs": q_iou_pairs,
-    # evaluation
-    "confusion_matrix": q_confusion_matrix,
-    "pr_curve": q_pr_curve,
-    "average_precision": q_average_precision,
-    "crowd_count_error": q_crowd_count_error,
-    "greedy_matching": q_greedy_matching,
-    "matcher_skew": q_matcher_skew,
-    "detection_pr_ap": q_detection_pr_ap,
-    # split
-    "hash_split": q_hash_split,
-    "atomic_chunks": q_atomic_chunks,
-    "balanced_split": q_balanced_split,
-    "balanced_split_approx": q_balanced_split_approx,
-    # text / dedup
-    "token_count": q_token_count,
-    "language_id": q_language_id,
-    "quality_score": q_quality_score,
-    "fingerprint_dedup": q_fingerprint_dedup,
-    "minhash_signature": q_minhash_signature,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "minhash_incremental": q_minhash_incremental,
-    "minhash_hot_bucket": q_minhash_hot_bucket,
-    "minhash_hot_bucket_star": q_minhash_hot_bucket_star,
-    "ngram_jaccard": q_ngram_jaccard,
-    "simhash": q_simhash,
-    # embeddings
-    "cosine_topk": q_cosine_topk,
-    "knn_label": q_knn_label,
-    "ivf_topk": q_ivf_topk,
-    "embedding_near_dup": q_embedding_near_dup,
-    # events
-    "sessionize": q_sessionize,
-    "hourly_rollup": q_hourly_rollup,
-    "json_extraction": q_json_extraction,
-    "forward_fill": q_forward_fill,
-    # multimodal
-    "multimodal_features": q_multimodal_features,
-}
-
-
-def oracles() -> dict[str, str]:
-    """DuckDB oracle SQL per query; keys absent here get the driver's
-    weaker rows-only check (genuinely non-SQL-expressible ops)."""
-    return {
-        "pricing_summary": ORACLE_PRICING_SUMMARY,
-        "shipping_priority": ORACLE_SHIPPING_PRIORITY,
-        "local_supplier_volume": ORACLE_LOCAL_SUPPLIER_VOLUME,
-        "revenue_forecast": ORACLE_REVENUE_FORECAST,
-        "filter_images_semijoin": ORACLE_FILTER_IMAGES,
-        "filter_annotations_emptied": ORACLE_FILTER_ANNOT_EMPTIED,
-        "remove_empty_images": ORACLE_REMOVE_EMPTY,
-        "anti_join_orphans": ORACLE_ANTI_ORPHANS,
-        "denormalize_category": ORACLE_DENORMALIZE,
-        "remap_classes": ORACLE_REMAP,
-        "remap_dense_rank": ORACLE_DENSE_RANK,
-        "reset_index": ORACLE_RESET_INDEX,
-        "match_index": ORACLE_MATCH_INDEX,
-        "merge_datasets": ORACLE_MERGE,
-        "diff_three_way": ORACLE_DIFF,
-        "booleanize": ORACLE_BOOLEANIZE,
-        "debooleanize": ORACLE_DEBOOLEANIZE,
-        "bbox_import_cxcywh": ORACLE_BBOX_IMPORT,
-        "bbox_export_xyxy": ORACLE_BBOX_EXPORT,
-        "bbox_relative": ORACLE_BBOX_RELATIVE,
-        "cap_bbox": ORACLE_CAP_BBOX,
-        "iou_pairs": ORACLE_IOU_PAIRS,
-        "confusion_matrix": ORACLE_CONFUSION,
-        "pr_curve": ORACLE_PR_CURVE,
-        "average_precision": ORACLE_AVERAGE_PRECISION,
-        "crowd_count_error": ORACLE_CROWD,
-        "hash_split": ORACLE_HASH_SPLIT,
-        "atomic_chunks": ORACLE_ATOMIC_CHUNKS,
-        "token_count": ORACLE_TOKEN_COUNT,
-        "language_id": _oracle_language_id(),
-        "quality_score": _oracle_quality(),
-        "fingerprint_dedup": ORACLE_FINGERPRINT,
-        "minhash_signature": _oracle_minhash(),
-        "minhash_lsh_pairs": _oracle_lsh(),
-        "minhash_incremental": _oracle_minhash_incremental(),
-        "ngram_jaccard": _oracle_ngram_jaccard(),
-        "simhash": _oracle_simhash(),
-        "cosine_topk": _oracle_cosine_topk(),
-        "ivf_topk": _oracle_ivf_topk(),
-        "knn_label": _oracle_knn_label(),
-        "embedding_near_dup": _oracle_embedding_near_dup(),
-        "sessionize": ORACLE_SESSIONIZE,
-        "hourly_rollup": ORACLE_HOURLY_ROLLUP,
-        "json_extraction": ORACLE_JSON,
-        "forward_fill": ORACLE_FFILL,
-        "multimodal_features": ORACLE_MULTIMODAL,
-        "greedy_matching": ORACLE_GREEDY_MATCHING,
-        "detection_pr_ap": ORACLE_DETECTION_PR_AP,
-    }
-
-# --------------------------------------------------------------------------
 # grouper / resample / interpolated precision / LSH ANN (round-1 batch 2)
 # --------------------------------------------------------------------------
 
@@ -2349,31 +2223,6 @@ SELECT query_id, neighbor_id, rank, round(cosine, 9) AS cosine
 FROM ranked WHERE rank <= 5
 """
 
-
-QUERIES.update(
-    {
-        "grouper_bins": q_grouper_bins,
-        "resample_count": q_resample_count,
-        "interpolated_precision": q_interpolated_precision,
-        "lsh_bucket_topk": q_lsh_bucket_topk,
-    }
-)
-
-_EXTRA_ORACLES = {
-    "grouper_bins": _oracle_grouper,
-    "resample_count": _oracle_resample,
-    "interpolated_precision": lambda: ORACLE_INTERP_PRECISION,
-    "lsh_bucket_topk": _oracle_lsh_bucket,
-}
-
-_base_oracles = oracles
-
-
-def oracles() -> dict[str, str]:  # noqa: F811 — extend the registry
-    out = _base_oracles()
-    for k, fn in _EXTRA_ORACLES.items():
-        out[k] = fn()
-    return out
 
 # --------------------------------------------------------------------------
 # batch 3: validation, pivot, tf-idf, overlap merge, class filters
@@ -2649,19 +2498,6 @@ def q_simple_split(spark, sf_dir):
     return out.groupBy("split").agg(F.count(F.lit(1)).alias("n"))
 
 
-QUERIES.update(
-    {
-        "validation_counts": q_validation_counts,
-        "bbox_validity_report": q_bbox_validity_report,
-        "keep_classes": q_keep_classes,
-        "merge_overlap_id_shift": q_merge_overlap_id_shift,
-        "confusion_pivot": q_confusion_pivot,
-        "top_terms": q_top_terms,
-        "tfidf_top_term": q_tfidf_top_term,
-        "simple_split": q_simple_split,
-    }
-)
-
 def _split_ladder_sql(frac_sql: str, shares: dict[str, float]) -> str:
     """DuckDB twin of ``splitter.split_ladder``: the cumulative-share
     thresholds are accumulated in PYTHON here, exactly as the Spark
@@ -2847,20 +2683,6 @@ WHERE f.A[sp.i * c.K + b.j + 1] > 0e0
 """
 
 
-_EXTRA_ORACLES.update(
-    {
-        "validation_counts": lambda: ORACLE_VALIDATION,
-        "bbox_validity_report": lambda: ORACLE_BBOX_VALIDITY,
-        "keep_classes": lambda: ORACLE_KEEP_CLASSES,
-        "merge_overlap_id_shift": lambda: ORACLE_MERGE_OVERLAP,
-        "confusion_pivot": lambda: ORACLE_CONFUSION_PIVOT,
-        "top_terms": lambda: ORACLE_TOP_TERMS,
-        "tfidf_top_term": _oracle_tfidf,
-        "simple_split": _oracle_simple_split,
-        "balanced_split": _oracle_balanced_portable,
-    }
-)
-
 # --------------------------------------------------------------------------
 # batch 4: BPE-ish tokenization, near-dup clustering
 # --------------------------------------------------------------------------
@@ -2927,14 +2749,28 @@ def q_dedup_clusters_distributed(spark, sf_dir):
     )
 
 
-QUERIES.update(
-    {
-        "bpe_token_count": q_bpe_token_count,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_clusters_distributed": q_dedup_clusters_distributed,
-    }
+# connected components are SQL-expressible as a recursive transitive
+# closure over the near-dup pairs; cluster_id = min doc_id of the
+# component, the fixpoint of the engine's min-label propagation
+def _oracle_dedup_clusters() -> str:
+    return f"""
+WITH RECURSIVE pairs AS (
+  SELECT id_a, id_b FROM ({_oracle_ngram_jaccard()})
+),
+edges AS (
+  SELECT id_a AS a, id_b AS b FROM pairs
+  UNION ALL
+  SELECT id_b AS a, id_a AS b FROM pairs
+),
+members AS (SELECT DISTINCT a AS doc_id FROM edges),
+reach(a, b) AS (
+  SELECT doc_id, doc_id FROM members
+  UNION
+  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
 )
-_EXTRA_ORACLES.update({"bpe_token_count": _oracle_bpe})
+SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a
+"""
+
 
 # --------------------------------------------------------------------------
 # batch 5: tie-collapsed PR curve, skew-salted aggregation
@@ -3011,19 +2847,6 @@ FROM lineitem GROUP BY l_returnflag
 """
 
 
-QUERIES.update(
-    {
-        "pr_curve_collapsed": q_pr_curve_collapsed,
-        "salted_aggregate": q_salted_aggregate,
-    }
-)
-_EXTRA_ORACLES.update(
-    {
-        "pr_curve_collapsed": lambda: ORACLE_PR_COLLAPSED,
-        "salted_aggregate": lambda: ORACLE_SALTED,
-    }
-)
-
 # --------------------------------------------------------------------------
 # batch 6: split-quality metrics as queries (EMD / share distance)
 # --------------------------------------------------------------------------
@@ -3098,8 +2921,6 @@ WITH f AS (
 SELECT round(sum(abs(cum)), 9) AS emd_train_valid FROM c
 """
 
-QUERIES.update({"split_quality": q_split_quality})
-_EXTRA_ORACLES.update({"split_quality": lambda: ORACLE_SPLIT_QUALITY})
 
 # --------------------------------------------------------------------------
 # batch 7: deterministic positional access
@@ -3118,9 +2939,6 @@ WITH head AS (SELECT o_orderkey AS id FROM orders ORDER BY id LIMIT 500)
 SELECT {_LINE_ID} AS id, l_orderkey AS image_id, l_quantity
 FROM lineitem WHERE l_orderkey IN (SELECT id FROM head)
 """
-
-QUERIES.update({"take_images": q_take_images})
-_EXTRA_ORACLES.update({"take_images": lambda: ORACLE_TAKE_IMAGES})
 
 
 # --------------------------------------------------------------------------
@@ -4610,79 +4428,6 @@ FROM documents d LEFT JOIN doc USING (doc_id), bias
 """
 
 
-QUERIES.update(
-    {
-        "decontaminate": q_decontaminate,
-        "repetition_signals": q_repetition_signals,
-        "stratified_sample": q_stratified_sample,
-        "pii_signals": q_pii_signals,
-        "paragraph_dedup": q_paragraph_dedup,
-        "table_profile": q_table_profile,
-        "pack_chunked": q_pack_chunked,
-        "pack_greedy": q_pack_greedy,
-        "mixture_weights": q_mixture_weights,
-        "global_shuffle": q_global_shuffle,
-        "cap_per_group": q_cap_per_group,
-        "quality_percentile": q_quality_percentile,
-        "semantic_dedup": q_semantic_dedup,
-        "dup_spans": q_dup_spans,
-        "remove_dup_spans": q_remove_dup_spans,
-        "cluster_representatives": q_cluster_representatives,
-        "normalize_text": q_normalize_text,
-        "decontaminate_spans": q_decontaminate_spans,
-        "gopher_rules": q_gopher_rules,
-        "char_entropy": q_char_entropy,
-        "ngram_logprob": q_ngram_logprob,
-        "bloom_novel": q_bloom_novel,
-        "asof_join": q_asof_join,
-        "range_join": q_range_join,
-        "rolling_agg": q_rolling_agg,
-        "funnel": q_funnel,
-        "curation_pipeline": q_curation_pipeline,
-        "vocab_pair_stats": q_vocab_pair_stats,
-        "weighted_sample": q_weighted_sample,
-        "zorder_layout": q_zorder_layout,
-        "boilerplate_removal": q_boilerplate_removal,
-        "classifier_score": q_classifier_score,
-        "embedding_incremental": q_embedding_incremental,
-    }
-)
-_EXTRA_ORACLES.update(
-    {
-        "decontaminate": _oracle_decontaminate,
-        "repetition_signals": _oracle_repetition,
-        "stratified_sample": _oracle_stratified,
-        "pii_signals": _oracle_pii,
-        "paragraph_dedup": _oracle_paragraph_dedup,
-        "table_profile": _oracle_table_profile,
-        "pack_chunked": _oracle_pack_chunked,
-        "mixture_weights": _oracle_mixture_weights,
-        "global_shuffle": _oracle_global_shuffle,
-        "cap_per_group": _oracle_cap_per_group,
-        "quality_percentile": _oracle_quality_percentile,
-        "semantic_dedup": _oracle_semantic_dedup,
-        "dup_spans": _oracle_dup_spans,
-        "remove_dup_spans": _oracle_remove_dup_spans,
-        "cluster_representatives": _oracle_cluster_representatives,
-        "normalize_text": _oracle_normalize_text,
-        "decontaminate_spans": _oracle_decontaminate_spans,
-        "gopher_rules": _oracle_gopher_rules,
-        "char_entropy": _oracle_char_entropy,
-        "ngram_logprob": _oracle_ngram_logprob,
-        "asof_join": _oracle_asof_join,
-        "range_join": _oracle_range_join,
-        "rolling_agg": _oracle_rolling_agg,
-        "funnel": _oracle_funnel,
-        "vocab_pair_stats": _oracle_vocab_pair_stats,
-        "weighted_sample": _oracle_weighted_sample,
-        "zorder_layout": _oracle_zorder_layout,
-        "boilerplate_removal": _oracle_boilerplate_removal,
-        "classifier_score": _oracle_classifier_score,
-        "embedding_incremental": _oracle_embedding_incremental,
-    }
-)
-
-
 def q_jsonl_roundtrip(spark, sf_dir):
     """JSONL corpus round-trip (io/jsonl.py, round 11): write the
     documents table as gzipped JSONL (declared schema, bounded records
@@ -4730,27 +4475,219 @@ FROM documents
 """
 
 
-QUERIES.update({"jsonl_roundtrip": q_jsonl_roundtrip})
-_EXTRA_ORACLES.update({"jsonl_roundtrip": _oracle_jsonl_roundtrip})
+# ==========================================================================
+# registry
+# ==========================================================================
 
 
-# ==========================================================================
-# Gate consolidation (round 2)
-# ==========================================================================
-# Round 1's CORRECTNESS snapshot contained exactly the first 50 entries of
-# this registry, in order — the driver gates at most 50 queries, so a
-# third of the standalone queries never got a correctness row. The registry below
-# merges closely related queries into combined gate queries (each facet
-# keeps its exact round-1 logic and oracle; schemas are aligned by
-# NULL-padded facet unions or same-grain joins) so that every operator
-# facet is inside the gated prefix EXCEPT the deliberately bench-only
-# stress/variant queries (matcher_skew, balanced_split_approx,
-# dedup_clusters_distributed, pack_greedy — pinned, with reasons, in
-# tests/test_suite_registry.py; their correctness coverage lives in
-# pytest, not the gate). GATE_FACETS records the combined-name
-# -> original-names mapping; ALL_QUERIES keeps every standalone query
-# (see test_suite_registry.py's registry-count guard for the current
-# total) for bench.py / scripts / tests.
+@dataclass(frozen=True)
+class Query:
+    """One standalone suite query. ``oracle`` is its DuckDB SQL, a
+    zero-argument builder of it (built lazily, per ``oracles()`` call),
+    or None where the op has no SQL twin (pytest covers those).
+    ``cols`` lists the output columns of a facet that rides a
+    NULL-padded gate union (the SQL union spells them out)."""
+
+    name: str
+    fn: QueryFn
+    oracle: str | Callable[[], str] | None
+    cols: tuple[str, ...] = ()
+
+    def sql(self) -> str | None:
+        return self.oracle() if callable(self.oracle) else self.oracle
+
+
+#: every standalone query, in bench.py's timing order (one shared JVM,
+#: so reordering would shift per-query numbers against BENCH_FULL.json)
+REGISTRY: list[Query] = [
+    Query("pricing_summary", q_pricing_summary, ORACLE_PRICING_SUMMARY),
+    Query("shipping_priority", q_shipping_priority, ORACLE_SHIPPING_PRIORITY),
+    Query("local_supplier_volume", q_local_supplier_volume,
+          ORACLE_LOCAL_SUPPLIER_VOLUME),
+    Query("revenue_forecast", q_revenue_forecast, ORACLE_REVENUE_FORECAST),
+    Query("filter_images_semijoin", q_filter_images_semijoin, ORACLE_FILTER_IMAGES),
+    Query("reset_index", q_reset_index, ORACLE_RESET_INDEX,
+          cols=("id", "image_id", "o_totalprice")),
+    Query("diff_three_way", q_diff_three_way, ORACLE_DIFF),
+    Query("iou_pairs", q_iou_pairs, ORACLE_IOU_PAIRS),
+    Query("pr_curve", q_pr_curve, ORACLE_PR_CURVE,
+          cols=("event_id", "event_type", "precision", "recall")),
+    Query("confusion_matrix", q_confusion_matrix, ORACLE_CONFUSION,
+          cols=("groundtruth_label", "prediction_label", "count", "share")),
+    Query("hash_split", q_hash_split, ORACLE_HASH_SPLIT),
+    Query("atomic_chunks", q_atomic_chunks, ORACLE_ATOMIC_CHUNKS),
+    Query("fingerprint_dedup", q_fingerprint_dedup, ORACLE_FINGERPRINT),
+    Query("minhash_lsh_pairs", q_minhash_lsh_pairs, _oracle_lsh,
+          cols=("id_a", "id_b", "jaccard")),
+    Query("minhash_incremental", q_minhash_incremental, _oracle_minhash_incremental,
+          cols=("id_a", "id_b", "jaccard")),
+    Query("ngram_jaccard", q_ngram_jaccard, _oracle_ngram_jaccard),
+    Query("simhash", q_simhash, _oracle_simhash),
+    Query("bpe_token_count", q_bpe_token_count, _oracle_bpe),
+    Query("tfidf_top_term", q_tfidf_top_term, _oracle_tfidf,
+          cols=("doc_id", "term", "tfidf")),
+    Query("cosine_topk", q_cosine_topk, _oracle_cosine_topk,
+          cols=("query_id", "neighbor_id", "rank", "cosine")),
+    Query("lsh_bucket_topk", q_lsh_bucket_topk, _oracle_lsh_bucket,
+          cols=("query_id", "neighbor_id", "rank", "cosine")),
+    Query("embedding_near_dup", q_embedding_near_dup, _oracle_embedding_near_dup),
+    Query("sessionize", q_sessionize, ORACLE_SESSIONIZE),
+    Query("hourly_rollup", q_hourly_rollup, ORACLE_HOURLY_ROLLUP),
+    Query("greedy_matching", q_greedy_matching, ORACLE_GREEDY_MATCHING),
+    Query("matcher_skew", q_matcher_skew, None),
+    Query("minhash_hot_bucket", q_minhash_hot_bucket, None),
+    Query("minhash_hot_bucket_star", q_minhash_hot_bucket_star, None),
+    Query("detection_pr_ap", q_detection_pr_ap, ORACLE_DETECTION_PR_AP),
+    Query("vocab_pair_stats", q_vocab_pair_stats, _oracle_vocab_pair_stats,
+          cols=("pair", "pair_count", "n_words")),
+    Query("weighted_sample", q_weighted_sample, _oracle_weighted_sample,
+          cols=("doc_id", "sample_weight", "sample_rank")),
+    Query("zorder_layout", q_zorder_layout, _oracle_zorder_layout,
+          cols=("l_orderkey", "l_linenumber", "zval", "zbucket")),
+    Query("boilerplate_removal", q_boilerplate_removal, _oracle_boilerplate_removal,
+          cols=("doc_id", "n_paras_before", "n_paras_after", "text_md5")),
+    Query("classifier_score", q_classifier_score, _oracle_classifier_score,
+          cols=("doc_id", "n_grams", "score")),
+    Query("embedding_incremental", q_embedding_incremental,
+          _oracle_embedding_incremental,
+          cols=("id_a", "id_b", "cosine")),
+    Query("keep_classes", q_keep_classes, ORACLE_KEEP_CLASSES,
+          cols=("id", "category_id", "category_str")),
+    Query("validation_counts", q_validation_counts, ORACLE_VALIDATION,
+          cols=("duplicate_image_ids", "duplicate_annotation_ids", "orphan_annotations",
+                "unknown_categories")),
+    Query("bbox_validity_report", q_bbox_validity_report, ORACLE_BBOX_VALIDITY,
+          cols=("id", "negative_coordinates", "non_positive_size", "exceeds_image")),
+    Query("simple_split", q_simple_split, _oracle_simple_split, cols=("split", "n")),
+    Query("split_quality", q_split_quality, ORACLE_SPLIT_QUALITY),
+    Query("take_images", q_take_images, ORACLE_TAKE_IMAGES,
+          cols=("id", "image_id", "l_quantity")),
+    Query("merge_overlap_id_shift", q_merge_overlap_id_shift, ORACLE_MERGE_OVERLAP,
+          cols=("id", "image_id", "l_quantity")),
+    Query("confusion_pivot", q_confusion_pivot, ORACLE_CONFUSION_PIVOT,
+          cols=("groundtruth_label", "F", "O")),
+    Query("pr_curve_collapsed", q_pr_curve_collapsed, ORACLE_PR_COLLAPSED,
+          cols=("event_type", "confidence", "precision", "recall")),
+    Query("salted_aggregate", q_salted_aggregate, ORACLE_SALTED,
+          cols=("l_returnflag", "n", "min_qty", "max_qty")),
+    Query("top_terms", q_top_terms, ORACLE_TOP_TERMS, cols=("term", "doc_freq")),
+    Query("dedup_clusters", q_dedup_clusters, _oracle_dedup_clusters),
+    Query("global_shuffle", q_global_shuffle, _oracle_global_shuffle,
+          cols=("doc_id", "shuffle_shard", "shuffle_pos")),
+    Query("cap_per_group", q_cap_per_group, _oracle_cap_per_group,
+          cols=("doc_id", "source", "cap_rank")),
+    Query("quality_percentile", q_quality_percentile, _oracle_quality_percentile,
+          cols=("doc_id", "lang", "q_pct")),
+    Query("semantic_dedup", q_semantic_dedup, _oracle_semantic_dedup,
+          cols=("vec_id", "cluster_id", "is_dup")),
+    Query("dup_spans", q_dup_spans, _oracle_dup_spans,
+          cols=("doc_id", "n_windows", "n_dup_windows", "dup_frac")),
+    Query("remove_dup_spans", q_remove_dup_spans, _oracle_remove_dup_spans,
+          cols=("doc_id", "n_tokens_before", "n_tokens_removed", "text_md5")),
+    Query("cluster_representatives", q_cluster_representatives,
+          _oracle_cluster_representatives,
+          cols=("doc_id", "cluster_id", "quality", "is_representative")),
+    Query("normalize_text", q_normalize_text, _oracle_normalize_text,
+          cols=("doc_id", "n_chars_messy", "n_chars_norm", "norm_md5")),
+    Query("decontaminate_spans", q_decontaminate_spans, _oracle_decontaminate_spans,
+          cols=("doc_id", "n_tokens_before", "n_tokens_removed", "text_md5")),
+    Query("gopher_rules", q_gopher_rules, _oracle_gopher_rules,
+          cols=("doc_id", "n_words", "mean_word_len", "symbol_word_ratio",
+                "alpha_word_frac", "n_stop_words", "bullet_line_frac",
+                "ellipsis_line_frac", "gopher_keep")),
+    Query("char_entropy", q_char_entropy, _oracle_char_entropy,
+          cols=("doc_id", "n_chars_real", "n_alphabet", "entropy_bits")),
+    Query("ngram_logprob", q_ngram_logprob, _oracle_ngram_logprob,
+          cols=("doc_id", "n_grams", "avg_nll")),
+    Query("bloom_novel", q_bloom_novel, None),
+    Query("asof_join", q_asof_join, _oracle_asof_join,
+          cols=("event_id", "user_id", "click_us", "purchase_us", "purchase_value")),
+    Query("range_join", q_range_join, _oracle_range_join,
+          cols=("click_id", "error_id", "user_id", "delta_us")),
+    Query("rolling_agg", q_rolling_agg, _oracle_rolling_agg,
+          cols=("event_id", "user_id", "n_24h", "sum_cents_24h", "max_cents_24h")),
+    Query("funnel", q_funnel, _oracle_funnel,
+          cols=("user_id", "step_1_us", "step_2_us", "step_3_us", "steps_completed")),
+    Query("decontaminate", q_decontaminate, _oracle_decontaminate,
+          cols=("doc_id", "overlap")),
+    Query("repetition_signals", q_repetition_signals, _oracle_repetition,
+          cols=("doc_id", "n_words", "top_word_count", "top_bigram_count",
+                "dup_trigram_excess")),
+    Query("stratified_sample", q_stratified_sample, _oracle_stratified,
+          cols=("lang", "n_sampled")),
+    Query("pii_signals", q_pii_signals, _oracle_pii,
+          cols=("doc_id", "n_email", "n_ipv4", "n_phone", "redacted_len")),
+    Query("paragraph_dedup", q_paragraph_dedup, _oracle_paragraph_dedup,
+          cols=("doc_id", "n_paras_before", "n_paras_after", "text_md5")),
+    Query("table_profile", q_table_profile, _oracle_table_profile,
+          cols=("column", "n", "n_null", "distinct", "min", "max", "mean", "p50", "p90",
+                "p99")),
+    Query("filter_annotations_emptied", q_filter_annotations_emptied,
+          ORACLE_FILTER_ANNOT_EMPTIED),
+    Query("remove_empty_images", q_remove_empty_images, ORACLE_REMOVE_EMPTY),
+    Query("anti_join_orphans", q_anti_join_orphans, ORACLE_ANTI_ORPHANS),
+    Query("denormalize_category", q_denormalize_category, ORACLE_DENORMALIZE),
+    Query("remap_classes", q_remap_classes, ORACLE_REMAP,
+          cols=("id", "category_id", "category_str")),
+    Query("remap_dense_rank", q_remap_dense_rank, ORACLE_DENSE_RANK),
+    Query("match_index", q_match_index, ORACLE_MATCH_INDEX),
+    Query("merge_datasets", q_merge_datasets, ORACLE_MERGE,
+          cols=("id", "o_totalprice", "origin")),
+    Query("booleanize", q_booleanize, ORACLE_BOOLEANIZE),
+    Query("debooleanize", q_debooleanize, ORACLE_DEBOOLEANIZE),
+    Query("bbox_import_cxcywh", q_bbox_import_cxcywh, ORACLE_BBOX_IMPORT,
+          cols=("id", "box_x_min", "box_y_min", "box_width", "box_height")),
+    Query("bbox_export_xyxy", q_bbox_export_xyxy, ORACLE_BBOX_EXPORT,
+          cols=("id", "box_x_min", "box_y_min", "box_x_max", "box_y_max")),
+    Query("bbox_relative", q_bbox_relative, ORACLE_BBOX_RELATIVE),
+    Query("cap_bbox", q_cap_bbox, ORACLE_CAP_BBOX),
+    Query("average_precision", q_average_precision, ORACLE_AVERAGE_PRECISION,
+          cols=("event_type", "ap")),
+    Query("interpolated_precision", q_interpolated_precision, ORACLE_INTERP_PRECISION,
+          cols=("event_id", "event_type", "precision_interp")),
+    Query("crowd_count_error", q_crowd_count_error, ORACLE_CROWD),
+    Query("balanced_split", q_balanced_split, _oracle_balanced_portable,
+          cols=("split", "o_orderpriority", "n")),
+    Query("balanced_split_approx", q_balanced_split_approx, None),
+    Query("token_count", q_token_count, ORACLE_TOKEN_COUNT),
+    Query("language_id", q_language_id, _oracle_language_id),
+    Query("quality_score", q_quality_score, _oracle_quality),
+    Query("minhash_signature", q_minhash_signature, _oracle_minhash,
+          cols=("doc_id", "mh_0", "mh_1", "mh_2", "mh_3")),
+    Query("knn_label", q_knn_label, _oracle_knn_label,
+          cols=("query_id", "predicted_label", "votes")),
+    Query("ivf_topk", q_ivf_topk, _oracle_ivf_topk,
+          cols=("query_id", "neighbor_id", "rank", "cosine")),
+    Query("json_extraction", q_json_extraction, ORACLE_JSON),
+    Query("forward_fill", q_forward_fill, ORACLE_FFILL,
+          cols=("event_id", "user_id", "last_purchase_value")),
+    Query("resample_count", q_resample_count, _oracle_resample,
+          cols=("event_type", "threshold", "count_at_least")),
+    Query("grouper_bins", q_grouper_bins, _oracle_grouper, cols=("bin_mid", "n")),
+    Query("multimodal_features", q_multimodal_features, ORACLE_MULTIMODAL),
+    Query("dedup_clusters_distributed", q_dedup_clusters_distributed, None),
+    Query("pack_chunked", q_pack_chunked, _oracle_pack_chunked,
+          cols=("shard", "doc_id", "n_tok", "pack_seq", "tok_from", "tok_to")),
+    Query("pack_greedy", q_pack_greedy, None),
+    Query("mixture_weights", q_mixture_weights, _oracle_mixture_weights,
+          cols=("shard", "n_tok_total", "share", "weight")),
+    Query("curation_pipeline", q_curation_pipeline, None),
+    Query("jsonl_roundtrip", q_jsonl_roundtrip, _oracle_jsonl_roundtrip,
+          cols=("doc_id", "rt_lang", "rt_source", "rt_n_chars", "rt_text_md5")),
+]
+
+ALL_QUERIES: dict[str, QueryFn] = {q.name: q.fn for q in REGISTRY}
+_BY_NAME: dict[str, Query] = {q.name: q for q in REGISTRY}
+
+
+# --------------------------------------------------------------------------
+# the 50-query gate
+# --------------------------------------------------------------------------
+# The driver gates at most 50 queries, so closely related queries share
+# a gate slot: a NULL-padded facet union (each facet keeps its own
+# logic and oracle leg) or a same-grain join on doc_id. Every standalone
+# query is a gate entry, a facet of one, or bench-only (pinned, with
+# reasons, in tests/test_suite_registry.py).
 
 
 def _facet_union(*legs):
@@ -4784,335 +4721,115 @@ def _facet_union_sql(*legs) -> str:
     return "\nUNION ALL\n".join(parts)
 
 
-def _pair(name_a, name_b):
-    """Combined gate query: facet-union of two registered standalone
-    queries (by ALL_QUERIES name)."""
+@dataclass(frozen=True)
+class FacetUnion:
+    """Gate slot: standalone facets stacked by :func:`_facet_union`."""
 
-    def q(spark, sf_dir):
-        return _facet_union(
-            (name_a, ALL_QUERIES[name_a](spark, sf_dir)),
-            (name_b, ALL_QUERIES[name_b](spark, sf_dir)),
-        )
+    name: str
+    facets: tuple[str, ...]
 
-    return q
+    def fn(self, spark, sf_dir):
+        legs = [(n, ALL_QUERIES[n](spark, sf_dir)) for n in self.facets]
+        return _facet_union(*legs)
 
-
-# ---- same-grain join merges (one row per doc, no facet needed) ----------
-
-
-def q_token_count_gate(spark, sf_dir):
-    """token_count + bpe_token_count facets joined on doc_id."""
-    return q_token_count(spark, sf_dir).join(
-        q_bpe_token_count(spark, sf_dir), "doc_id"
-    )
+    def sql(self) -> str:
+        legs = [_BY_NAME[n] for n in self.facets]
+        return _facet_union_sql(*[(q.name, q.sql(), q.cols) for q in legs])
 
 
-def q_language_id_gate(spark, sf_dir):
-    """language_id + quality_score facets joined on doc_id."""
-    return q_language_id(spark, sf_dir).join(
-        q_quality_score(spark, sf_dir), "doc_id"
-    )
+@dataclass(frozen=True)
+class DocJoin:
+    """Gate slot: two one-row-per-doc facets joined on doc_id;
+    ``select`` is the oracle's projection over the aliases a and b."""
+
+    name: str
+    facets: tuple[str, str]
+    select: str
+
+    def fn(self, spark, sf_dir):
+        a, b = (ALL_QUERIES[n](spark, sf_dir) for n in self.facets)
+        return a.join(b, "doc_id")
+
+    def sql(self) -> str:
+        a, b = (_BY_NAME[n].sql() for n in self.facets)
+        return f"""
+SELECT {self.select}
+FROM ({a}) a JOIN ({b}) b USING (doc_id)
+"""
 
 
-ALL_QUERIES: dict[str, QueryFn] = dict(QUERIES)
-
-_PAIRS: dict[str, tuple[str, str]] = {
-    # gate name         facet a                facet b
-    "remap_classes": ("remap_classes", "keep_classes"),
-    "reset_index": ("reset_index", "take_images"),
-    "merge_datasets": ("merge_datasets", "merge_overlap_id_shift"),
-    "bbox_import_cxcywh": ("bbox_import_cxcywh", "bbox_export_xyxy"),
-    "confusion_matrix": ("confusion_matrix", "confusion_pivot"),
-    "pr_curve": ("pr_curve", "pr_curve_collapsed"),
-    "average_precision": ("average_precision", "interpolated_precision"),
-    "balanced_split": ("balanced_split", "simple_split"),
-    "validation_counts": ("validation_counts", "bbox_validity_report"),
-    "minhash_signature": ("minhash_signature", "minhash_lsh_pairs"),
-    "top_terms": ("top_terms", "tfidf_top_term"),
-    "cosine_topk": ("cosine_topk", "lsh_bucket_topk"),
-    "knn_label": ("knn_label", "ivf_topk"),
-    "salted_aggregate": ("salted_aggregate", "grouper_bins"),
-}
-
-# forward_fill grew past a pair in late round 6: the temporal-join
-# operators (asof_join, range_join) ride the same events-table gate
-# slot as a 4-facet union.
-_TEMPORAL_FACETS = (
-    "forward_fill", "resample_count", "asof_join", "range_join",
-    "rolling_agg", "funnel",
-)
-
-
-def q_temporal_gate(spark, sf_dir):
-    """Events-table temporal operators as one NULL-padded facet union:
-    forward_fill ⊕ resample_count ⊕ asof_join ⊕ range_join."""
-    return _facet_union(
-        *[(n, ALL_QUERIES[n](spark, sf_dir)) for n in _TEMPORAL_FACETS]
-    )
-
-_CURATION_FACETS = (
-    "decontaminate", "repetition_signals", "stratified_sample", "pii_signals",
-    "paragraph_dedup", "table_profile", "pack_chunked", "mixture_weights",
-    "global_shuffle", "cap_per_group", "quality_percentile", "semantic_dedup",
-    "dup_spans", "remove_dup_spans", "cluster_representatives",
-    "normalize_text", "decontaminate_spans", "gopher_rules",
-    "char_entropy", "ngram_logprob",
-    # round 7 (per the COVERAGE.md gate-headroom policy: dedup/curation
-    # additions ride this slot)
-    "minhash_incremental",
-    # round 8: vocabulary induction, weighted sampling, z-order layout,
-    # boilerplate removal, hashed n-gram classifier
-    "vocab_pair_stats",
-    "weighted_sample",
-    "zorder_layout",
-    "boilerplate_removal",
-    "classifier_score",
-    "embedding_incremental",
-    # round 11: the last oracle-less curation surface (JSONL corpus
-    # I/O) gets a hash-exact round-trip leg
-    "jsonl_roundtrip",
-)
-
-GATE_FACETS: dict[str, list[str]] = {
-    **{k: list(v) for k, v in _PAIRS.items()},
-    "token_count": ["token_count", "bpe_token_count"],
-    "language_id": ["language_id", "quality_score"],
-    "forward_fill": list(_TEMPORAL_FACETS),
-    "pipeline_quality": list(_CURATION_FACETS),
-}
-
-_GATE_ORDER = [
+#: the gate in driver order: a name is a standalone query, a tuple is
+#: ``(gate name, facet, ...)`` for a facet union
+_GATE: list[str | tuple[str, ...] | DocJoin] = [
     "pricing_summary", "shipping_priority", "local_supplier_volume",
     "revenue_forecast",
     "filter_images_semijoin", "filter_annotations_emptied",
     "remove_empty_images", "anti_join_orphans", "denormalize_category",
-    "remap_classes", "remap_dense_rank", "reset_index", "match_index",
-    "merge_datasets", "diff_three_way", "booleanize", "debooleanize",
-    "bbox_import_cxcywh", "bbox_relative", "cap_bbox", "iou_pairs",
-    "confusion_matrix", "pr_curve", "average_precision",
+    ("remap_classes", "remap_classes", "keep_classes"),
+    "remap_dense_rank",
+    ("reset_index", "reset_index", "take_images"),
+    "match_index",
+    ("merge_datasets", "merge_datasets", "merge_overlap_id_shift"),
+    "diff_three_way", "booleanize", "debooleanize",
+    ("bbox_import_cxcywh", "bbox_import_cxcywh", "bbox_export_xyxy"),
+    "bbox_relative", "cap_bbox", "iou_pairs",
+    ("confusion_matrix", "confusion_matrix", "confusion_pivot"),
+    ("pr_curve", "pr_curve", "pr_curve_collapsed"),
+    ("average_precision", "average_precision", "interpolated_precision"),
     "crowd_count_error", "greedy_matching", "detection_pr_ap",
-    "hash_split", "atomic_chunks", "balanced_split", "split_quality",
-    "validation_counts",
-    "token_count", "language_id", "fingerprint_dedup",
-    "minhash_signature", "ngram_jaccard", "simhash", "dedup_clusters",
-    "top_terms",
-    "cosine_topk", "knn_label", "embedding_near_dup",
-    "sessionize", "hourly_rollup", "json_extraction", "forward_fill",
-    "salted_aggregate", "multimodal_features",
-    "pipeline_quality",
+    "hash_split", "atomic_chunks",
+    ("balanced_split", "balanced_split", "simple_split"),
+    "split_quality",
+    ("validation_counts", "validation_counts", "bbox_validity_report"),
+    DocJoin(
+        "token_count", ("token_count", "bpe_token_count"),
+        "a.doc_id, a.n_tokens, b.n_bpe_tokens, b.n_unique",
+    ),
+    DocJoin(
+        "language_id", ("language_id", "quality_score"),
+        "a.doc_id, a.lang_pred, b.quality",
+    ),
+    "fingerprint_dedup",
+    ("minhash_signature", "minhash_signature", "minhash_lsh_pairs"),
+    "ngram_jaccard", "simhash", "dedup_clusters",
+    ("top_terms", "top_terms", "tfidf_top_term"),
+    ("cosine_topk", "cosine_topk", "lsh_bucket_topk"),
+    ("knn_label", "knn_label", "ivf_topk"),
+    "embedding_near_dup", "sessionize", "hourly_rollup", "json_extraction",
+    # events-table temporal operators
+    (
+        "forward_fill", "forward_fill", "resample_count", "asof_join",
+        "range_join", "rolling_agg", "funnel",
+    ),
+    ("salted_aggregate", "salted_aggregate", "grouper_bins"),
+    "multimodal_features",
+    # curation operators: dedup, quality, sampling, packing, ordering,
+    # PII, decontamination, vocab, layout, JSONL round-trip
+    (
+        "pipeline_quality", "decontaminate", "repetition_signals",
+        "stratified_sample", "pii_signals", "paragraph_dedup",
+        "table_profile", "pack_chunked", "mixture_weights", "global_shuffle",
+        "cap_per_group", "quality_percentile", "semantic_dedup", "dup_spans",
+        "remove_dup_spans", "cluster_representatives", "normalize_text",
+        "decontaminate_spans", "gopher_rules", "char_entropy",
+        "ngram_logprob", "minhash_incremental", "vocab_pair_stats",
+        "weighted_sample", "zorder_layout", "boilerplate_removal",
+        "classifier_score", "embedding_incremental", "jsonl_roundtrip",
+    ),
+]
+GATE: list[Query | FacetUnion | DocJoin] = [
+    _BY_NAME[e] if isinstance(e, str)
+    else FacetUnion(e[0], e[1:]) if isinstance(e, tuple)
+    else e
+    for e in _GATE
 ]
 
-
-def q_pipeline_quality_gate(spark, sf_dir):
-    """ALL curation-operator facets (``_CURATION_FACETS`` — dedup,
-    quality, sampling, packing, ordering, PII, decontamination, vocab,
-    layout, JSONL round-trip; 28 as of round 11) as one NULL-padded
-    facet union."""
-    return _facet_union(
-        *[(n, ALL_QUERIES[n](spark, sf_dir)) for n in _CURATION_FACETS]
-    )
+QUERIES: dict[str, QueryFn] = {g.name: g.fn for g in GATE}
+GATE_FACETS: dict[str, list[str]] = {
+    g.name: list(g.facets) for g in GATE if not isinstance(g, Query)
+}
 
 
-_gate: dict[str, QueryFn] = {}
-for _name in _GATE_ORDER:
-    if _name in _PAIRS:
-        _gate[_name] = _pair(*_PAIRS[_name])
-    elif _name == "token_count":
-        _gate[_name] = q_token_count_gate
-    elif _name == "language_id":
-        _gate[_name] = q_language_id_gate
-    elif _name == "forward_fill":
-        _gate[_name] = q_temporal_gate
-    elif _name == "pipeline_quality":
-        _gate[_name] = q_pipeline_quality_gate
-    else:
-        _gate[_name] = ALL_QUERIES[_name]
-QUERIES = _gate
-
-
-_prev_oracles = oracles
-
-
-def _gate_oracles() -> dict[str, str]:
-    base = _prev_oracles()
-    cols = {
-        "remap_classes": ["id", "category_id", "category_str"],
-        "keep_classes": ["id", "category_id", "category_str"],
-        "reset_index": ["id", "image_id", "o_totalprice"],
-        "take_images": ["id", "image_id", "l_quantity"],
-        "merge_datasets": ["id", "o_totalprice", "origin"],
-        "merge_overlap_id_shift": ["id", "image_id", "l_quantity"],
-        "bbox_import_cxcywh": ["id", "box_x_min", "box_y_min", "box_width", "box_height"],
-        "bbox_export_xyxy": ["id", "box_x_min", "box_y_min", "box_x_max", "box_y_max"],
-        "confusion_matrix": ["groundtruth_label", "prediction_label", "count", "share"],
-        "confusion_pivot": ["groundtruth_label", "F", "O"],
-        "pr_curve": ["event_id", "event_type", "precision", "recall"],
-        "pr_curve_collapsed": ["event_type", "confidence", "precision", "recall"],
-        "average_precision": ["event_type", "ap"],
-        "interpolated_precision": ["event_id", "event_type", "precision_interp"],
-        "validation_counts": ["duplicate_image_ids", "duplicate_annotation_ids", "orphan_annotations", "unknown_categories"],
-        "bbox_validity_report": ["id", "negative_coordinates", "non_positive_size", "exceeds_image"],
-        "minhash_signature": ["doc_id", "mh_0", "mh_1", "mh_2", "mh_3"],
-        "minhash_lsh_pairs": ["id_a", "id_b", "jaccard"],
-        "top_terms": ["term", "doc_freq"],
-        "tfidf_top_term": ["doc_id", "term", "tfidf"],
-        "cosine_topk": ["query_id", "neighbor_id", "rank", "cosine"],
-        "lsh_bucket_topk": ["query_id", "neighbor_id", "rank", "cosine"],
-        "knn_label": ["query_id", "predicted_label", "votes"],
-        "ivf_topk": ["query_id", "neighbor_id", "rank", "cosine"],
-        "salted_aggregate": ["l_returnflag", "n", "min_qty", "max_qty"],
-        "grouper_bins": ["bin_mid", "n"],
-        "balanced_split": ["split", "o_orderpriority", "n"],
-        "simple_split": ["split", "n"],
-        "forward_fill": ["event_id", "user_id", "last_purchase_value"],
-        "resample_count": ["event_type", "threshold", "count_at_least"],
-    }
-    out: dict[str, str] = {}
-    for name in _GATE_ORDER:
-        if name in _PAIRS:
-            a, b = _PAIRS[name]
-            if a in base and b in base:
-                out[name] = _facet_union_sql(
-                    (a, base[a], cols[a]), (b, base[b], cols[b])
-                )
-            # (every pair leg now has an oracle — round 7 closed the
-            # last rows-only slot with the portable-order greedy CTE)
-        elif name == "token_count":
-            out[name] = f"""
-SELECT a.doc_id, a.n_tokens, b.n_bpe_tokens, b.n_unique
-FROM ({base["token_count"]}) a JOIN ({base["bpe_token_count"]}) b USING (doc_id)
-"""
-        elif name == "language_id":
-            out[name] = f"""
-SELECT a.doc_id, a.lang_pred, b.quality
-FROM ({base["language_id"]}) a JOIN ({base["quality_score"]}) b USING (doc_id)
-"""
-        elif name == "forward_fill":
-            t_cols = {
-                "forward_fill": cols["forward_fill"],
-                "resample_count": cols["resample_count"],
-                "asof_join": [
-                    "event_id", "user_id", "click_us", "purchase_us",
-                    "purchase_value",
-                ],
-                "range_join": ["click_id", "error_id", "user_id", "delta_us"],
-                "rolling_agg": [
-                    "event_id", "user_id", "n_24h", "sum_cents_24h",
-                    "max_cents_24h",
-                ],
-                "funnel": [
-                    "user_id", "step_1_us", "step_2_us", "step_3_us",
-                    "steps_completed",
-                ],
-            }
-            out[name] = _facet_union_sql(
-                *[(n, base[n], t_cols[n]) for n in _TEMPORAL_FACETS]
-            )
-        elif name == "pipeline_quality":
-            leg_cols = {
-                "decontaminate": ["doc_id", "overlap"],
-                "repetition_signals": [
-                    "doc_id", "n_words", "top_word_count",
-                    "top_bigram_count", "dup_trigram_excess",
-                ],
-                "stratified_sample": ["lang", "n_sampled"],
-                "pii_signals": [
-                    "doc_id", "n_email", "n_ipv4", "n_phone", "redacted_len",
-                ],
-                "paragraph_dedup": [
-                    "doc_id", "n_paras_before", "n_paras_after", "text_md5",
-                ],
-                "table_profile": [
-                    "column", "n", "n_null", "distinct", "min", "max",
-                    "mean", "p50", "p90", "p99",
-                ],
-                "pack_chunked": [
-                    "shard", "doc_id", "n_tok", "pack_seq",
-                    "tok_from", "tok_to",
-                ],
-                "mixture_weights": [
-                    "shard", "n_tok_total", "share", "weight",
-                ],
-                "global_shuffle": ["doc_id", "shuffle_shard", "shuffle_pos"],
-                "cap_per_group": ["doc_id", "source", "cap_rank"],
-                "quality_percentile": ["doc_id", "lang", "q_pct"],
-                "semantic_dedup": ["vec_id", "cluster_id", "is_dup"],
-                "dup_spans": [
-                    "doc_id", "n_windows", "n_dup_windows", "dup_frac",
-                ],
-                "remove_dup_spans": [
-                    "doc_id", "n_tokens_before", "n_tokens_removed",
-                    "text_md5",
-                ],
-                "cluster_representatives": [
-                    "doc_id", "cluster_id", "quality", "is_representative",
-                ],
-                "normalize_text": [
-                    "doc_id", "n_chars_messy", "n_chars_norm", "norm_md5",
-                ],
-                "decontaminate_spans": [
-                    "doc_id", "n_tokens_before", "n_tokens_removed",
-                    "text_md5",
-                ],
-                "gopher_rules": [
-                    "doc_id", "n_words", "mean_word_len",
-                    "symbol_word_ratio", "alpha_word_frac", "n_stop_words",
-                    "bullet_line_frac", "ellipsis_line_frac", "gopher_keep",
-                ],
-                "char_entropy": [
-                    "doc_id", "n_chars_real", "n_alphabet", "entropy_bits",
-                ],
-                "ngram_logprob": ["doc_id", "n_grams", "avg_nll"],
-                "minhash_incremental": ["id_a", "id_b", "jaccard"],
-                "vocab_pair_stats": ["pair", "pair_count", "n_words"],
-                "weighted_sample": ["doc_id", "sample_weight", "sample_rank"],
-                "zorder_layout": [
-                    "l_orderkey", "l_linenumber", "zval", "zbucket",
-                ],
-                "boilerplate_removal": [
-                    "doc_id", "n_paras_before", "n_paras_after", "text_md5",
-                ],
-                "classifier_score": ["doc_id", "n_grams", "score"],
-                "embedding_incremental": ["id_a", "id_b", "cosine"],
-                "jsonl_roundtrip": [
-                    "doc_id", "rt_lang", "rt_source", "rt_n_chars",
-                    "rt_text_md5",
-                ],
-            }
-            out[name] = _facet_union_sql(
-                *[(n, base[n], leg_cols[n]) for n in _CURATION_FACETS]
-            )
-        elif name in base:
-            out[name] = base[name]
-    return out
-
-
-oracles = _gate_oracles
-
-
-# dedup_clusters upgrade: connected components ARE SQL-expressible via a
-# recursive transitive closure (components are tiny near-dup clusters, so
-# the closure stays small) — promotes the query from rows-only to
-# hash-checked. cluster_id = min doc_id of the component, exactly the
-# fixpoint of the engine's min-label propagation.
-def _oracle_dedup_clusters() -> str:
-    return f"""
-WITH RECURSIVE pairs AS (
-  SELECT id_a, id_b FROM ({_oracle_ngram_jaccard()})
-),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION ALL
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-members AS (SELECT DISTINCT a AS doc_id FROM edges),
-reach(a, b) AS (
-  SELECT doc_id, doc_id FROM members
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-)
-SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a
-"""
-
-
-_EXTRA_ORACLES.update({"dedup_clusters": _oracle_dedup_clusters})
+def oracles() -> dict[str, str]:
+    """DuckDB oracle SQL per gate query, in gate order."""
+    return {g.name: sql for g in GATE if (sql := g.sql()) is not None}

@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 AUDITED = [
     "pricing_summary",
@@ -134,7 +136,7 @@ def main() -> None:
         for s in schemas:
             out.append(f"- `{s[:140]}`")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(_REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(AUDITED)} queries)")
 

@@ -8,7 +8,8 @@ rounds, matcher group fan-out. Usage:
 
     python scripts/run_scaling100.py [scaled_dir]
 
-Prints one JSON line to append to scripts/scaling_r4.json's evidence.
+Prints one JSON line (the committed latest run is
+scripts/scaling100_last.json).
 """
 
 from __future__ import annotations

@@ -54,6 +54,7 @@ def test_docstring_count_literals_match_registry():
     """Every registry count quoted in a module docstring must track the
     real registry — round 9 shipped '(96 entries)' in __spark_entry__
     while ALL_QUERIES had grown to 105."""
+    import os
     import re
 
     import __spark_entry__ as entry
@@ -68,21 +69,58 @@ def test_docstring_count_literals_match_registry():
     # suite.py quotes both counts in its doctest — executed by the
     # package-wide doctest run, but pin it here too for one-place truth
     assert f"({q_count}, {all_count})" in suite.__doc__
-    # the pipeline_quality gate docstring quotes its facet count
-    assert (
-        f"{len(suite._CURATION_FACETS)} as of"
-        in suite.q_pipeline_quality_gate.__doc__
-    )
+    # COVERAGE.md's gate headroom policy quotes the facet counts of
+    # the two wide facet-union slots
+    cov = open(
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "COVERAGE.md")
+    ).read()
+    curation = re.search(r"(\d+) facets\s+ride it today", cov)
+    temporal = re.search(r"ride that slot \((\d+)\s+facets today\)", cov)
+    assert int(curation.group(1)) == len(suite.GATE_FACETS["pipeline_quality"])
+    assert int(temporal.group(1)) == len(suite.GATE_FACETS["forward_fill"])
 
 
 def test_bench_list_covers_all_queries():
-    """bench.py times a hand-ordered list — a new ALL_QUERIES entry
-    must be added there too or it silently never gets a number."""
+    """bench.py times every registry entry, in registry order."""
     import bench
 
     from lours_spark.suite import ALL_QUERIES
 
-    assert set(bench.BENCH_QUERIES) == set(ALL_QUERIES)
+    assert bench.BENCH_QUERIES == list(ALL_QUERIES)
+
+
+def test_driver_contract_is_pinned():
+    """The gate names (in order) and their oracle SQL text are what the
+    driver records; a registry refactor must leave both byte-identical.
+    An intended change to a gate query or oracle updates these digests
+    in the same commit."""
+    import hashlib
+    import json
+
+    import __spark_entry__ as entry
+
+    def digest(obj) -> str:
+        return hashlib.sha256(json.dumps(obj).encode()).hexdigest()
+
+    assert digest(list(entry.queries())) == (
+        "189244fd9303c33dcb9c4d78224d631c1ff0464d73dac19d2329a23da33c0ea5"
+    )
+    assert digest(entry.oracle_sql()) == (
+        "076860ed681da161056ba96ae58584b7e340c864d5db2bdf120f041c29079b0c"
+    )
+
+
+def test_cols_set_exactly_on_union_facets():
+    """``Query.cols`` feeds only the NULL-padded union SQL: every facet
+    of a union slot needs it, and no other record carries it."""
+    from lours_spark import suite
+
+    union_facets = {
+        f for g in suite.GATE if isinstance(g, suite.FacetUnion) for f in g.facets
+    }
+    with_cols = {q.name for q in suite.REGISTRY if q.cols}
+    assert with_cols == union_facets
+    assert len({q.name for q in suite.REGISTRY}) == len(suite.REGISTRY)
 
 
 def test_bench_sf1_top20_pinned_to_registry():
@@ -153,7 +191,7 @@ def _query_secs(parsed: dict) -> dict:
     return {k: v / scale for k, v in parsed["queries"].items() if k != "omitted_fastest"}
 
 
-def test_bench_stdout_line_fits_driver_window():
+def test_bench_stdout_line_fits_driver_window(capsys):
     """The driver records only the LAST ~2000 chars of bench.py's
     stdout; bench steps per-query precision down 3→2→1 decimals in
     seconds → integer centiseconds, then sheds the STABLE tail set as a
@@ -184,6 +222,7 @@ def test_bench_stdout_line_fits_driver_window():
 
     # degenerate worst case: all-equal timings still yields a valid,
     # fitting, self-describing line at centisecond resolution
+    capsys.readouterr()
     line2 = bench.stdout_line(1.0, 0.1, {n: 9.87 for n in names})
     assert len(line2) <= 1980
     parsed2 = json.loads(line2)
@@ -191,6 +230,14 @@ def test_bench_stdout_line_fits_driver_window():
     omitted2 = parsed2["queries"].get("omitted_fastest", 0)
     assert omitted2 + len(got2) == len(names)
     assert all(abs(sec - 9.87) < 0.005 + 1e-9 for sec in got2.values())
+    # this case sheds by speed too; stderr reports each count apart
+    n_stable = len(set(bench.STDOUT_SHED_FIRST) & set(names))
+    n_fastest = omitted2 - n_stable
+    assert n_fastest > 0, omitted2
+    err = capsys.readouterr().err
+    assert (
+        f"omitting {n_stable} stable-tail and {n_fastest} fastest queries" in err
+    ), err
 
 
 def test_bench_stdout_shed_set_is_stable():
