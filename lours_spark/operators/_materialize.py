@@ -5,11 +5,11 @@ freed by the ContextCleaner when the Python frame drops (a
 function-local ``cache()`` has no unpersist path once the result frame
 is returned, so it leaks one CacheManager entry per call for the
 session's life), and — unlike an unpopulated cache — concurrent
-branches of one action cannot race its population (r11: three legs of
-the LSH pairs action each re-ran the dominant minhash pass up to 3×
+branches of one action cannot race its population (three legs of the
+LSH pairs action each re-ran the dominant minhash pass up to 3×
 against a cache still being populated).
 
-EXECUTOR-LOSS CAVEAT (ADVICE r11): localCheckpoint blocks are NOT
+EXECUTOR-LOSS CAVEAT: localCheckpoint blocks are NOT
 recomputable. Spark documents it as unsafe with dynamic allocation —
 if an executor holding checkpoint blocks is decommissioned (spot
 reclaim, scale-down, failure), every downstream action fails
@@ -18,18 +18,21 @@ On clusters with executor churn set::
 
     spark.conf.set("spark.lours.materialize", "cache")
 
-to fall back to ``persist()`` (+ eager ``count()`` where the call site
-materializes eagerly). The cache fallback recomputes on block loss but
-re-inherits the session-lifetime CacheManager entry — callers on such
-clusters should ``spark.catalog.clearCache()`` (or unpersist by plan)
-at pipeline boundaries.
+to fall back to ``persist()`` + an eager populating ``count()``. The
+cache fallback recomputes on block loss but re-inherits the
+session-lifetime CacheManager entry — callers on such clusters should
+``spark.catalog.clearCache()`` (or unpersist by plan) at pipeline
+boundaries.
 
 ``eager=False`` marks the checkpoint without running a materializing
 job: the first downstream action that touches all partitions
-materializes it as a side effect — same sharing guarantee, one fewer
-serial job wave. Use it when such an action is guaranteed; an eager
-site pays one extra job but is safe under partial-consumption plans
-(e.g. a broadcast-build that only reads some partitions first).
+materializes it as a side effect — one fewer serial job wave. Use it
+when such an action is guaranteed; an eager site pays one extra job
+but is safe under partial-consumption plans (e.g. a broadcast-build
+that only reads some partitions first). ``eager`` only applies to
+``localCheckpoint``: under ``cache`` the populating ``count()`` always
+runs, because branches of one downstream action would otherwise race
+the unpopulated cache and each recompute ``df``.
 """
 
 from __future__ import annotations
@@ -46,7 +49,6 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     strategy = df.sparkSession.conf.get(STRATEGY_CONF, "localCheckpoint")
     if strategy == "cache":
         out = df.persist()
-        if eager:
-            out.count()
+        out.count()  # always: see the module doc's population race
         return out
     return df.localCheckpoint(eager=eager)

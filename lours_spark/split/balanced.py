@@ -1104,7 +1104,7 @@ def balanced_split(
     order — ``"python"`` for reference RNG parity, ``"portable"`` for
     the engine-replicable seeded-md5 order (oracle-checkable; see
     :func:`greedy_assign`)."""
-    from lours_spark.split.chunks import atomic_chunks_distributed
+    from lours_spark.split.chunks import atomic_chunks
 
     if mode == "approximate" and keep_separate and len(keep_separate) == 1:
         # approximate mode is free to pick ANY collision-free chunk key
@@ -1179,24 +1179,8 @@ def balanced_split(
             .drop("__assigned", "chunk_id")
         )
 
-    if keep_separate and len(keep_separate) == 1:
-        # single keep-separate column: components ARE the column's
-        # distinct values (atomic_chunks_distributed fast path) — attach
-        # the chunk id as a window column instead of computing an
-        # (id, chunk_id) frame and self-joining the whole table on id
-        from pyspark.sql import Window
-
-        c = keep_separate[0]
-        w = Window.partitionBy(c)
-        with_chunks = df.withColumn(
-            "chunk_id",
-            F.when(F.col(c).isNotNull(), F.min(id_col).over(w)).otherwise(
-                F.col(id_col)
-            ),
-        )
-    elif keep_separate:
-        chunks = atomic_chunks_distributed(df, id_col, keep_separate)
-        with_chunks = df.join(chunks, id_col)
+    if keep_separate:
+        with_chunks = atomic_chunks(df, id_col, keep_separate)
     else:
         with_chunks = df.withColumn("chunk_id", F.col(id_col))
     spark = df.sparkSession

@@ -5,171 +5,69 @@ rows sharing any keep-separate group value must land in the same split,
 so rows are nodes, shared group values are edges, and chunks are the
 connected components.
 
-Two implementations:
-
-- ``atomic_chunks_driver``: collect the (row → group-value) bipartite
-  edge list and union-find on the driver — exact reference semantics,
-  fine to ~10⁷ edges (the edge list is tiny relative to the data:
-  one row per (row, group-column) pair).
-- ``atomic_chunks_distributed``: iterative min-label propagation with
-  alternating row→value / value→row min-joins until fixpoint — the
-  100 TB path (same algorithm GraphFrames uses under the hood), no
-  driver materialization.
+One algorithm, two execution paths. :func:`atomic_chunks` reduces the
+keep-separate groups to "star" edges (every row linked to its group's
+min row id) and hands them to :func:`connected_components`, which
+counts the edges exactly and then runs either a driver union-find
+(small edge lists) or distributed min-label propagation (the same
+algorithm GraphFrames uses, no driver materialization). A single
+keep-separate column needs no graph at all: its components are the
+column's distinct values, one window.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _edges(df: DataFrame, id_col: str, group_cols: list[str]) -> DataFrame:
-    """Bipartite (row id, tagged group value) edge list."""
-    parts = [
-        df.select(
-            F.col(id_col).alias("row_id"),
-            F.concat_ws("=", F.lit(c), F.col(c).cast("string")).alias("group_value"),
-        ).filter(F.col(c).isNotNull())
+def atomic_chunks(df: DataFrame, id_col: str, group_cols: list[str]) -> DataFrame:
+    """Attach ``chunk_id`` = min ``id_col`` of the row's atomic chunk:
+    rows are linked when they share a non-NULL value in any of
+    ``group_cols``; a row with every group value NULL is its own chunk.
+
+    With one group column ``id_col`` must be a primary key (the
+    invariant ``Dataset.check()`` reports as ``duplicate_*_ids``): the
+    chunks are then the column's distinct values. With several columns
+    an id may repeat across rows and bridge their groups.
+
+    >>> df = spark.createDataFrame(
+    ...     [(0, "a", "x"), (1, "a", "y"), (2, "b", "y"), (3, None, None)],
+    ...     "id long, g1 string, g2 string")
+    >>> sorted(tuple(r) for r in atomic_chunks(df, "id", ["g1", "g2"])
+    ...        .select("id", "chunk_id").collect())
+    [(0, 0), (1, 0), (2, 0), (3, 3)]
+    """
+    ident = F.col(id_col)
+    if len(group_cols) == 1:
+        c = group_cols[0]
+        return df.withColumn(
+            "chunk_id",
+            F.when(
+                F.col(c).isNotNull(), F.min(id_col).over(Window.partitionBy(c))
+            ).otherwise(ident),
+        )
+    # star edges: each row → its group's min id, one leg per column;
+    # a self-edge (the group's min row itself) carries no link
+    legs = [
+        df.filter(F.col(c).isNotNull())
+        .select(
+            ident.alias("id_a"),
+            F.min(id_col).over(Window.partitionBy(c)).alias("id_b"),
+        )
+        .filter(F.col("id_a") != F.col("id_b"))
         for c in group_cols
     ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def atomic_chunks_driver(
-    df: DataFrame, id_col: str, group_cols: list[str]
-) -> DataFrame:
-    """Exact union-find on the collected edge list. Returns
-    (row_id, chunk_id) with chunk_id = min row id of the component."""
-    edges = _edges(df, id_col, group_cols).collect()
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-
-    for e in edges:
-        union(("r", e["row_id"]), ("v", e["group_value"]))
-    # only rows that PARTICIPATE in an edge need driver treatment: a
-    # row absent from the edge list has every group value NULL, so it
-    # is its own singleton component — resolved distributed below via
-    # coalesce, keeping driver state size-of-edges, not size-of-table
-    row_ids = sorted({e["row_id"] for e in edges})
-    comp_min: dict = {}
-    assignments = []
-    for rid in row_ids:
-        root = find(("r", rid))
-        comp_min.setdefault(root, rid)
-        assignments.append((rid, comp_min[root]))
-    spark = df.sparkSession
-    adf = F.broadcast(
-        spark.createDataFrame(assignments, f"{id_col} long, __chunk long")
+    comp = connected_components(reduce(DataFrame.unionByName, legs)).select(
+        F.col("node_id").alias("__node"), F.col("component_id").alias("__comp")
     )
     return (
-        df.select(id_col)
-        .join(adf, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("__chunk"), F.col(id_col)).alias("chunk_id"),
-        )
+        df.join(comp, ident == F.col("__node"), "left")
+        .withColumn("chunk_id", F.coalesce(F.col("__comp"), ident))
+        .drop("__node", "__comp")
     )
-
-
-def atomic_chunks_distributed(
-    df: DataFrame,
-    id_col: str,
-    group_cols: list[str],
-    max_iter: int = 20,
-    unique_ids: bool = True,
-) -> DataFrame:
-    """Label propagation: labels start as row ids; alternately take the
-    min label per group value and per row until no label changes.
-    Converges in O(component diameter) rounds — components here are
-    star-shaped around group values, so typically ≤ 4-6 rounds.
-
-    Single-column fast path: with one keep-separate column AND one row
-    per id (``unique_ids``, the annotation-table shape this operator
-    was built for) the components ARE the column's distinct values, so
-    one window suffices — no iteration, no convergence actions. When an
-    id can appear in SEVERAL rows with different group values (e.g.
-    dedup pair membership), those rows transitively bridge groups and
-    the fast path would under-merge — pass ``unique_ids=False`` to
-    force the iterative propagation."""
-    if len(group_cols) == 1 and unique_ids:
-        from pyspark.sql import Window
-
-        c = group_cols[0]
-        w = Window.partitionBy(c)
-        return df.select(
-            F.col(id_col),
-            F.when(
-                F.col(c).isNotNull(), F.min(id_col).over(w)
-            ).otherwise(F.col(id_col)).alias("chunk_id"),
-        )
-    from pyspark.storagelevel import StorageLevel
-
-    # the edge list is consumed twice per round across every round —
-    # materialize it ONCE or each round's job re-runs the (potentially
-    # expensive) upstream that derived the edges
-    edges = _edges(df, id_col, group_cols).persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count()
-    labels = df.select(F.col(id_col).alias("row_id"))
-    if not unique_ids:
-        labels = labels.distinct()
-    labels = labels.withColumn("label", F.col("row_id"))
-    for _ in range(max_iter):
-        val_min = (
-            edges.join(labels, "row_id")
-            .groupBy("group_value")
-            .agg(F.min("label").alias("vlabel"))
-        )
-        new_labels = (
-            edges.join(val_min, "group_value")
-            .groupBy("row_id")
-            .agg(F.min("vlabel").alias("new_label"))
-        )
-        # one materializing job per round (see connected_components):
-        # checkpoint the round's output, then probe convergence from
-        # the checkpointed partitions. localCheckpoint blocks are NOT
-        # recomputable — on executor-churn clusters (dynamic
-        # allocation / spot) a lost block fails the remaining rounds;
-        # see operators/_materialize.py for the caveat (the iterative
-        # loop keeps direct localCheckpoint: a cache() fallback would
-        # accumulate one CacheManager entry per round)
-        merged = (
-            labels.join(new_labels, "row_id", "left")
-            .withColumn(
-                "next",
-                F.least(F.col("label"), F.coalesce(F.col("new_label"), F.col("label"))),
-            )
-            .withColumn("__changed", F.col("next") != F.col("label"))
-            .select("row_id", F.col("next").alias("label"), "__changed")
-            .localCheckpoint()  # also truncates lineage per round
-        )
-        labels = merged.drop("__changed")
-        if merged.filter("__changed").limit(1).count() == 0:
-            break
-    else:
-        edges.unpersist()
-        raise RuntimeError(
-            f"atomic_chunks_distributed did not converge in {max_iter} "
-            "rounds — a component with diameter above max_iter would be "
-            "silently under-merged (split-leakage risk). Raise max_iter; "
-            "propagation needs one round per graph hop."
-        )
-    edges.unpersist()
-    return labels.select(F.col("row_id").alias(id_col), F.col("label").alias("chunk_id"))
 
 
 def connected_components(
@@ -242,8 +140,11 @@ def connected_components(
                 parent[max(a, b)] = min(a, b)
         nodes = sorted({v for row in sample for v in (row[0], row[1])})
         comp = [(n, find(n)) for n in nodes]
+        # node ids keep the edge columns' (widened) type: string-keyed
+        # graphs included, exactly as the distributed path returns them
+        t = pe.select("__a").union(pe.select("__b")).schema[0].dataType
         return pairs.sparkSession.createDataFrame(
-            comp, "node_id long, component_id long"
+            comp, f"node_id {t.simpleString()}, component_id {t.simpleString()}"
         )
 
     # size the propagation's partitioning to the measured edge count
@@ -272,8 +173,8 @@ def connected_components(
         .withColumn("label", F.col("node_id"))
     )
     for _ in range(max_iter):
-        # PUSH form (round 11): the pull form joined edges to labels on
-        # __nbr — a key neither frame is partitioned by — costing three
+        # PUSH form: joining edges to labels on __nbr (the pull form)
+        # would use a key neither frame is partitioned by and cost three
         # exchanges per round (re-hash both join legs + the groupBy).
         # The edge list is symmetric ((a,b) and (b,a) both present), so
         # "min over my neighbors' labels" == "min over labels pushed to
@@ -281,7 +182,7 @@ def connected_components(
         # hash(node_id, n_parts) → NO exchange), address each label to
         # the edge's other end, and aggregate — ONE exchange per round,
         # which the explicit repartition keys so the merged join below
-        # is exchange-free too. Identical labels every round.
+        # is exchange-free too.
         nbr_min = (
             edges.join(labels, "node_id")
             .select(
@@ -294,7 +195,10 @@ def connected_components(
         # ONE materializing job per round: the eager localCheckpoint
         # runs the join+agg pipeline and pins its output; the
         # convergence probe then only scans the checkpointed
-        # partitions instead of re-running the round's pipeline
+        # partitions instead of re-running the round's pipeline. The
+        # loop checkpoints directly rather than through
+        # operators/_materialize.py: a cache() fallback would hold one
+        # CacheManager entry per round (executor-loss caveat: see there)
         merged = (
             labels.join(nbr_min, "node_id", "left")
             .withColumn(

@@ -856,14 +856,14 @@ FROM f GROUP BY 1
 
 
 def q_atomic_chunks(spark, sf_dir):
-    """Distributed connected components (min-label propagation) over a
-    keep-separate group column."""
-    from lours_spark.split.chunks import atomic_chunks_distributed
+    """Atomic chunks over one keep-separate group column (the
+    single-column window path of ``atomic_chunks``)."""
+    from lours_spark.split.chunks import atomic_chunks
 
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("long").alias("id"), "o_custkey"
     )
-    return atomic_chunks_distributed(o, "id", ["o_custkey"])
+    return atomic_chunks(o, "id", ["o_custkey"]).select("id", "chunk_id")
 
 
 ORACLE_ATOMIC_CHUNKS = """

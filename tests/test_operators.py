@@ -878,7 +878,7 @@ def test_minhash_lsh_pairs_threads_hash_fn_to_signature_job(
 
 
 def test_materialize_strategy_gate(spark):
-    """The spark.lours.materialize knob (ADVICE r11): default is
+    """The spark.lours.materialize knob: default is
     localCheckpoint (lineage cut, blocks freed by the ContextCleaner,
     NOT recomputable on executor loss); 'cache' falls back to
     persist() for dynamic-allocation clusters. Same rows either way."""
@@ -901,6 +901,13 @@ def test_materialize_strategy_gate(spark):
         out2 = materialize(df, eager=True)
         assert out2.storageLevel.useMemory  # a real CacheManager entry
         assert sorted(tuple(r) for r in out2.collect()) == expect
+        # eager=False still populates the cache before any downstream
+        # action: branches of one action would otherwise race it
+        spark.catalog.clearCache()
+        out3 = materialize(spark.range(7), eager=False)
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        assert any(i.numCachedPartitions() > 0 for i in infos)
+        assert out3.count() == 7
     finally:
         spark.conf.unset(STRATEGY_CONF)
         spark.catalog.clearCache()

@@ -871,3 +871,48 @@ def test_versioned_pointer_model_property(seq):
                 assert current in on_disk
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+nullable_group = st.one_of(st.none(), st.integers(0, 6))
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(0, 500), nullable_group, nullable_group),
+        max_size=60,
+        unique_by=lambda r: r[0],
+    ),
+    cols=st.sampled_from([["g1"], ["g1", "g2"]]),
+)
+def test_atomic_chunks_matches_union_find(spark, rows, cols):
+    """atomic_chunks == union-find over rows sharing any non-NULL group
+    value, chunk id = min row id of the component."""
+    from lours_spark.split.chunks import atomic_chunks
+
+    df = spark.createDataFrame(rows, "id long, g1 long, g2 long")
+    got = {
+        r["id"]: r["chunk_id"]
+        for r in atomic_chunks(df, "id", cols).collect()
+    }
+
+    parent = list(range(len(rows)))
+
+    def find(i):
+        while parent[i] != i:
+            i = parent[i]
+        return i
+
+    first = {}
+    for i, row in enumerate(rows):
+        for c, v in zip(("g1", "g2"), row[1:]):
+            if c in cols and v is not None:
+                parent[find(i)] = find(first.setdefault((c, v), i))
+    low = {}
+    for i, row in enumerate(rows):
+        low[find(i)] = min(low.get(find(i), row[0]), row[0])
+    assert got == {row[0]: low[find(i)] for i, row in enumerate(rows)}

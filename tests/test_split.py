@@ -11,10 +11,8 @@ from lours_spark.split.balanced import (
     kl_divergence,
     share_distance,
 )
-from lours_spark.split.chunks import (
-    atomic_chunks_distributed,
-    atomic_chunks_driver,
-)
+from lours_spark.split import chunks
+from lours_spark.split.chunks import atomic_chunks
 from lours_spark.split.splitter import hash_split, residual_shares, simple_split
 
 
@@ -97,22 +95,42 @@ def test_residual_shares(spark):
     assert resid["train"] == pytest.approx(0.0)
 
 
-def test_atomic_chunks_driver_and_distributed_agree(spark):
-    rows = [
-        (0, "a", "x"),
-        (1, "a", "y"),  # linked to 0 via a
-        (2, "b", "y"),  # linked to 1 via y
-        (3, "c", "z"),  # isolated component
-        (4, "d", "z"),  # linked to 3 via z
-        (5, "e", "w"),  # isolated
+def test_atomic_chunks_star_edges(spark, monkeypatch):
+    """Rows sharing any non-NULL group value form one chunk whose id is
+    the min row id, identically on both connected_components paths."""
+    df = spark.createDataFrame(
+        [
+            # the chain 0-a-1-y-2, the pair 3-z-4 and the singleton 5
+            (0, "a", "x"), (1, "a", "y"), (2, "b", "y"), (3, "c", "z"),
+            (4, "d", "z"), (5, "e", "w"),
+            # NULL links nothing: an all-NULL row keeps its own id
+            (10, "f", None), (11, None, "v"), (12, "f", "v"), (13, None, None),
+            # a repeated id bridges its rows' groups; every row is kept once
+            (27, "g", None), (27, "h", None), (28, "g", None), (29, "h", None),
+        ],
+        "id long, g1 string, g2 string",
+    )
+    want = [(0, 0), (1, 0), (2, 0), (3, 3), (4, 3), (5, 5),
+            (10, 10), (11, 10), (12, 10), (13, 13),
+            (27, 27), (27, 27), (28, 27), (29, 27)]
+    cc = chunks.connected_components
+    for thresh in (0, 2_000_000):  # 0 → distributed path; else driver
+        monkeypatch.setattr(
+            chunks, "connected_components",
+            lambda pairs, t=thresh: cc(pairs, driver_threshold=t),
+        )
+        out = atomic_chunks(df, "id", ["g1", "g2"]).select("id", "chunk_id")
+        assert sorted(tuple(r) for r in out.collect()) == want, thresh
+    # string ids keep their type (both CC paths: test_connected_components_hybrid)
+    sdf = spark.createDataFrame(
+        [("r1", "a", None), ("r0", "b", "x"), ("r2", "a", "x")],
+        "id string, g1 string, g2 string",
+    )
+    out = atomic_chunks(sdf, "id", ["g1", "g2"])
+    assert out.schema["chunk_id"].dataType.simpleString() == "string"
+    assert sorted(tuple(r) for r in out.select("id", "chunk_id").collect()) == [
+        ("r0", "r0"), ("r1", "r0"), ("r2", "r0"),
     ]
-    df = spark.createDataFrame(rows, "id long, g1 string, g2 string")
-    drv = {r["id"]: r["chunk_id"] for r in atomic_chunks_driver(df, "id", ["g1", "g2"]).collect()}
-    dist = {r["id"]: r["chunk_id"] for r in atomic_chunks_distributed(df, "id", ["g1", "g2"]).collect()}
-    assert drv == dist
-    assert drv[0] == drv[1] == drv[2] == 0
-    assert drv[3] == drv[4] == 3
-    assert drv[5] == 5
 
 
 def test_kl_and_emd_and_share():
@@ -728,12 +746,21 @@ def test_connected_components_hybrid(spark):
     pairs = spark.createDataFrame(
         [(1, 5), (5, 9), (2, 3), (10, 1)], "id_a long, id_b long"
     )
+    spairs = spark.createDataFrame(
+        [("b", "c"), ("c", "a"), ("x", "y")], "id_a string, id_b string"
+    )
     for thresh in (0, 100):  # 0 → distributed path; 100 → driver path
         out = {
             r.node_id: r.component_id
             for r in connected_components(pairs, driver_threshold=thresh).collect()
         }
         assert out == {1: 1, 5: 1, 9: 1, 10: 1, 2: 2, 3: 2}
+        # non-long ids keep their type on both paths
+        sout = connected_components(spairs, driver_threshold=thresh)
+        assert sout.schema["component_id"].dataType.simpleString() == "string"
+        assert {r.node_id: r.component_id for r in sout.collect()} == {
+            "a": "a", "b": "a", "c": "a", "x": "x", "y": "x",
+        }
 
 
 def test_dedup_clusters_distributed_agrees_on_real_pairs(spark):
