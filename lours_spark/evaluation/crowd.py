@@ -9,6 +9,7 @@ needed, ``percentile_approx`` at scale).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -91,55 +92,51 @@ def count_error_curve(
 ) -> DataFrame:
     """Error statistics AT EVERY confidence threshold (the reference's
     per-confidence grouped curves, ``crowd_detection_evaluator.py:
-    150-236``): one row per (group ×) threshold with the
-    :func:`count_error_stats` columns.
+    150-236``): one row per (group ×) distinct threshold with the
+    :func:`count_error_stats` columns — each row equals
+    ``count_error_stats(per_image_counts(gt, pred, t, group_cols))``
+    (a repeated threshold gives one row).
 
-    Single-pass shape: per image, ONE conditional count per grid point
-    (all inside one groupBy, codegen'd — the ``resample_count`` trick),
-    then an explode to (image, threshold) rows and one stats
-    aggregation — NOT a re-filter + re-join of the prediction table per
-    threshold, which would rescan it ``len(thresholds)`` times.
+    Shape: per ``(image_id, *group_cols)`` the groundtruth side keeps
+    its count and the prediction side collects its confidences into
+    one list; after the full outer join, ONE literal array of
+    thresholds explodes each key into (key, threshold) rows and
+    ``pred_count = size(filter(confidences, c -> c >= threshold))``.
+    The plan is the same size for any grid length (a conditional
+    count per grid point would grow it, and its driver-side build
+    time, with the grid), and the prediction table is scanned once.
+    Memory bound: a list holds at most one image's predictions of one
+    group, the same per-group working set the greedy matcher keeps.
     """
     group_cols = group_cols or []
-    gt = groundtruth.groupBy("image_id", *group_cols).agg(
-        F.count(F.lit(1)).alias("gt_count")
-    )
+    keys = ["image_id", *group_cols]
+    gt = groundtruth.groupBy(*keys).agg(F.count(F.lit(1)).alias("gt_count"))
     conf = (
         F.col("confidence")
         if "confidence" in predictions.columns
         else F.lit(1.0)
     )
-    aggs = [
-        F.count(F.when(conf >= t, 1)).alias(f"__c_{i}")
-        for i, t in enumerate(thresholds)
-    ]
-    pred_wide = predictions.groupBy("image_id", *group_cols).agg(*aggs)
-    joined = gt.join(pred_wide, ["image_id", *group_cols], "full_outer").fillna(
-        {"gt_count": 0, **{f"__c_{i}": 0 for i in range(len(thresholds))}}
-    )
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(float(t)).alias("confidence"),
-                F.col(f"__c_{i}").alias("pred_count"),
-            )
-            for i, t in enumerate(thresholds)
-        ]
-    )
-    long = joined.select(
-        "image_id", *group_cols, "gt_count", F.explode(pairs).alias("__p")
-    ).select(
-        "image_id",
-        *group_cols,
-        F.col("__p.confidence").alias("confidence"),
-        F.col("gt_count"),
-        F.col("__p.pred_count").alias("pred_count"),
-        (F.col("__p.pred_count") - F.col("gt_count")).alias("error"),
-    ).filter(
-        # a gt-less image whose predictions all fall below this
-        # threshold is absent from BOTH sides of the reference's
-        # per-threshold outer join — drop its synthetic (0,0) row
-        (F.col("gt_count") > 0) | (F.col("pred_count") > 0)
+    pred = predictions.groupBy(*keys).agg(F.collect_list(conf).alias("__confs"))
+    grid = F.lit(np.unique(np.asarray(thresholds, dtype="float64")))
+    long = (
+        gt.join(pred, keys, "full_outer")
+        .select(
+            *keys,
+            F.coalesce(F.col("gt_count"), F.lit(0)).alias("gt_count"),
+            F.coalesce(F.col("__confs"), F.array()).alias("__confs"),
+            F.explode(grid).alias("confidence"),
+        )
+        .withColumn(
+            "pred_count",
+            F.size(F.filter("__confs", lambda c: c >= F.col("confidence"))),
+        )
+        .withColumn("error", F.col("pred_count") - F.col("gt_count"))
+        .filter(
+            # a gt-less image whose predictions all fall below this
+            # threshold is absent from BOTH sides of the reference's
+            # per-threshold outer join — drop its synthetic (0,0) row
+            (F.col("gt_count") > 0) | (F.col("pred_count") > 0)
+        )
     )
     return count_error_stats(
         long,

@@ -38,12 +38,10 @@ class DetectionEvaluator:
         self.name = name or groundtruth.dataset_name
         self.predictions_dictionary: dict = {}
         self._matches: dict[tuple, DataFrame] = {}
-        #: curve frames materialized by compute_precision_recall.
-        #: Since r12 those are localCheckpoint blocks by default (freed
-        #: by the ContextCleaner when the frames drop; unpersist() is a
-        #: harmless no-op) — clear_cache() still drops the references
-        #: and the matches memo, and still unpersists under the
-        #: spark.lours.materialize=cache fallback.
+        #: curve frames persisted by compute_precision_recall; the
+        #: persist is lazy (the first action on the returned frames
+        #: fills it), so clear_cache() unpersists them and drops the
+        #: matches memo.
         self._persisted: list[DataFrame] = []
         for pname, ds in predictions.items():
             self.add_predictions_dataset(pname, ds)
@@ -101,8 +99,19 @@ class DetectionEvaluator:
     ) -> tuple[DataFrame, DataFrame]:
         """Multi-IoU grouped PR curves + APs over every requested model
         (reference ``detection_evaluator.py:382-682``); returns
-        (curves, aps), each with a ``model`` column."""
-        from lours_spark.evaluation.evaluator import compute_precision_recall
+        (curves, aps), each with a ``model`` column.
+
+        Builds only those two frames and starts no Spark job: the curve
+        frame is persisted lazily, so the first action on either output
+        fills it and later ones read it until :meth:`clear_cache`
+        unpersists it. One action that reads both outputs at once (a
+        join of curves and aps) would race the unfilled cache and run
+        the matcher twice: consume them one after the other. (The
+        functional
+        :func:`~lours_spark.evaluation.evaluator.compute_precision_recall`
+        also derives the grid AP and pays a row-count probe to route
+        it.)"""
+        from lours_spark.evaluation.evaluator import _curves, average_precisions
 
         curves_parts, ap_parts = [], []
         for pname in self._names(predictions_names):
@@ -114,19 +123,21 @@ class DetectionEvaluator:
                 if not rematch_per_iou
                 else None
             )
-            res = compute_precision_recall(
+            curves = _curves(
                 self.groundtruth.annotations,
                 self.predictions_dictionary[pname].annotations,
-                ious=list(ious),
-                group_cols=list(groups),
-                rematch_per_iou=rematch_per_iou,
+                list(ious),
+                list(groups),
+                rematch_per_iou,
                 matches=memo,
+            ).persist()
+            self._persisted.append(curves)
+            curves_parts.append(curves.withColumn("model", F.lit(pname)))
+            ap_parts.append(
+                average_precisions(curves, list(groups)).withColumn(
+                    "model", F.lit(pname)
+                )
             )
-            self._persisted.append(res["curves"])
-            curves_parts.append(
-                res["curves"].withColumn("model", F.lit(pname))
-            )
-            ap_parts.append(res["ap"].withColumn("model", F.lit(pname)))
         curves = curves_parts[0]
         for c in curves_parts[1:]:
             curves = curves.unionByName(c)
@@ -175,12 +186,10 @@ class DetectionEvaluator:
 
 
     def clear_cache(self) -> None:
-        """Drop every curve frame reference pinned by
-        :meth:`compute_precision_recall` and the matches memo — call
-        between evaluation rounds in a long-lived session so
-        materialized blocks don't accumulate (checkpoint blocks are
-        freed when the references drop; under the cache fallback the
-        unpersist below releases the CacheManager entries)."""
+        """Unpersist every curve frame persisted by
+        :meth:`compute_precision_recall` and drop the matches memo —
+        call between evaluation rounds in a long-lived session so
+        cached blocks don't accumulate."""
         for df in self._persisted:
             try:
                 df.unpersist()

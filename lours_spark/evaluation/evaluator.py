@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -285,9 +286,7 @@ def ap_at_recall_grid(
     bit-identical output (same doubles compared).
     """
     keys = [*group_cols, "iou_threshold"]
-    grid = F.array(
-        *[F.lit(i / (n_points - 1)) for i in range(n_points)]
-    )
+    grid = F.lit(np.arange(n_points) / (n_points - 1))
     # pads are excluded: the COCO accumulate arrays contain detection
     # rows only — the synthetic (recall 0, precision 1) head point
     # would otherwise inflate the r=0 sample by a full grid share
@@ -378,7 +377,7 @@ def average_precisions_both(
     agg = agg.withColumn(
         "__np", F.expr("filter(__pts, x -> NOT x.is_pad)")
     ).withColumn("average_precision", riemann)
-    grid = F.array(*[F.lit(i / (n_points - 1)) for i in range(n_points)])
+    grid = F.lit(np.arange(n_points) / (n_points - 1))
     samples = F.transform(
         grid,
         lambda r: F.coalesce(
@@ -493,6 +492,40 @@ def compute_confusion_matrix(
     return confusion_counts(rows, normalize=normalize)
 
 
+def _curves(
+    groundtruth: DataFrame,
+    predictions: DataFrame,
+    ious: Sequence[float],
+    group_cols: Sequence[str],
+    rematch_per_iou: bool,
+    gt_attrs: DataFrame | None = None,
+    pred_attrs: DataFrame | None = None,
+    matches: DataFrame | None = None,
+) -> DataFrame:
+    """The (unmaterialized) PR curve frame of
+    :func:`compute_precision_recall`: one matching with thresholds
+    applied at curve time, or one matching per threshold under
+    ``rematch_per_iou``."""
+    from lours_spark.evaluation.matching import compute_matches
+
+    if not rematch_per_iou:
+        # a caller-supplied matches frame (e.g. the DetectionEvaluator
+        # facade's memo) skips the expensive greedy pass entirely;
+        # rematch_per_iou=True ignores it — each threshold rematches
+        # at its own acceptance by definition
+        if matches is None:
+            matches = compute_matches(groundtruth, predictions)
+        return precision_recall_curves(
+            matches, ious, group_cols, gt_attrs, pred_attrs
+        )
+    curves = None
+    for t in ious:
+        m = compute_matches(groundtruth, predictions, min_iou=float(t))
+        c = precision_recall_curves(m, [t], group_cols, gt_attrs, pred_attrs)
+        curves = c if curves is None else curves.unionByName(c)
+    return curves
+
+
 def compute_precision_recall(
     groundtruth: DataFrame,
     predictions: DataFrame,
@@ -515,10 +548,11 @@ def compute_precision_recall(
     threshold at acceptance ``iou > t`` — what ``COCOeval`` does; use
     with ``ap_at_recall_grid`` for pycocotools-comparable numbers.
 
-    ``cache_curves`` materializes the curve frame eagerly (r12: via
+    ``cache_curves`` materializes the curve frame (via
     ``operators/_materialize.py`` — localCheckpoint by default, so the
     blocks are freed when the returned frames drop instead of leaking
-    a CacheManager entry per call): both AP outputs derive from it,
+    a CacheManager entry per call) in the same action as the row-count
+    probe that routes ``ap_both``: both AP outputs derive from it,
     and a lazy persist is not enough — a downstream action that
     consumes ``ap`` and ``ap_grid`` together (e.g. their join)
     schedules both branch subtrees concurrently, so each would race to
@@ -540,44 +574,26 @@ def compute_precision_recall(
     >>> (r["category_id"], r["iou_threshold"], round(r["average_precision"], 6))
     (0, 0.5, 1.0)
     """
-    from lours_spark.evaluation.matching import compute_matches
-
-    if not rematch_per_iou:
-        # a caller-supplied matches frame (e.g. the DetectionEvaluator
-        # facade's memo) skips the expensive greedy pass entirely;
-        # rematch_per_iou=True ignores it — each threshold rematches
-        # at its own acceptance by definition
-        if matches is None:
-            matches = compute_matches(groundtruth, predictions)
-        curves = precision_recall_curves(
-            matches, ious, group_cols, gt_attrs, pred_attrs
-        )
-    else:
-        per_t = []
-        for t in ious:
-            m = compute_matches(groundtruth, predictions, min_iou=float(t))
-            per_t.append(
-                precision_recall_curves(m, [t], group_cols, gt_attrs, pred_attrs)
-            )
-        curves = per_t[0]
-        for c in per_t[1:]:
-            curves = curves.unionByName(c)
+    curves = _curves(
+        groundtruth, predictions, ious, group_cols, rematch_per_iou,
+        gt_attrs, pred_attrs, matches,
+    )
     tiny = False
     if cache_curves:
-        # materialize (eager localCheckpoint by default), NOT a bare
-        # persist (r12): the persisted curve frame had no unpersist
-        # path inside this function — one CacheManager entry leaked
-        # per call for the session's life unless the caller remembered
-        # to unpersist (the DetectionEvaluator facade did; the
-        # functional path and every suite query did not). Checkpoint
-        # blocks are freed by the ContextCleaner when the returned
-        # frames drop; a caller's unpersist() stays a harmless no-op.
-        # Strategy knob + executor-loss caveat:
+        # materialize (localCheckpoint by default), NOT a bare persist:
+        # a persisted curve frame has no unpersist path inside this
+        # function — one CacheManager entry would leak per call for the
+        # session's life unless the caller remembered to unpersist.
+        # Checkpoint blocks are freed by the ContextCleaner when the
+        # returned frames drop; a caller's unpersist() stays a harmless
+        # no-op. Strategy knob + executor-loss caveat:
         # operators/_materialize.py.
         from lours_spark.operators._materialize import materialize
 
-        curves = materialize(curves, eager=True)
-        n_curve_rows = curves.count()  # cheap: reads materialized blocks
+        curves = materialize(curves, eager=False)
+        # the probe is the action that fills the lazy checkpoint (under
+        # the cache strategy it reads the already-populated blocks)
+        n_curve_rows = curves.count()
         if stats is not None:
             stats["n_curve_rows"] = n_curve_rows
         if n_curve_rows <= TINY_CURVE_ROWS:

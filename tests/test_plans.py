@@ -309,6 +309,39 @@ def test_ap_both_tiny_path_single_aggregation(spark, suite):
         res["curves"].unpersist()  # no-op by default; real under 'cache'
 
 
+def test_count_error_curve_plan_independent_of_grid(spark):
+    """The count-error curve's optimized plan must not grow with the
+    confidence grid: the thresholds are one array literal exploded per
+    (image, group) key, not one conditional-count aggregate per grid
+    point, each built on the driver."""
+    from lours_spark.evaluation.crowd import count_error_curve
+
+    gt = spark.createDataFrame(
+        [(i, i % 4, i % 2) for i in range(12)],
+        "id long, image_id long, category_id int",
+    )
+    pred = spark.createDataFrame(
+        [(100 + i, i % 5, i % 2, (i % 10) / 10.0) for i in range(15)],
+        "id long, image_id long, category_id int, confidence double",
+    )
+
+    def n_aggregates(n_points: int) -> int:
+        grid = [i / (n_points - 1) for i in range(n_points)]
+        df = count_error_curve(gt, pred, grid, ["category_id"])
+        total, todo = 0, [df._jdf.queryExecution().optimizedPlan()]
+        while todo:
+            node = todo.pop()
+            if node.nodeName() == "Aggregate":
+                total += node.aggregateExpressions().size()
+            kids = node.children()
+            todo += [kids.apply(i) for i in range(kids.size())]
+        return total
+
+    small = n_aggregates(3)
+    assert small > 0
+    assert n_aggregates(101) == small
+
+
 def test_ivf_topk_broadcasts_probe_side(spark, suite):
     """The IVF search join must broadcast the (tiny) query-probe frame:
     the centroid key has only num_centroids distinct values, so a

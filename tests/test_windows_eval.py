@@ -125,34 +125,58 @@ def test_evaluate_detections_end_to_end(tiny_dataset):
 
 def test_count_error_curve(spark):
     """Per-confidence error curve equals per-threshold recomputation
-    (reference crowd_detection_evaluator.py:150-236 curves), in one
-    prediction-table pass."""
-    from lours_spark.evaluation.crowd import (
-        count_error_curve,
-        count_error_stats,
-        per_image_counts,
-    )
+    (reference crowd_detection_evaluator.py:150-236 curves) exactly,
+    row for row: grouped and ungrouped, an image with predictions only,
+    gt-less images whose predictions all fall below some thresholds
+    (the dropped (0, 0) rows), a NULL confidence, a repeated threshold
+    and a prediction frame without a confidence column."""
+    import functools
+
+    from pyspark.sql import DataFrame
+
+    from lours_spark.evaluation.crowd import count_error_curve
 
     gt = spark.createDataFrame(
-        [(i, img) for i, img in enumerate([0, 0, 0, 1, 1, 2])],
-        "id long, image_id long",
+        [
+            (i, img, cat)
+            for i, (img, cat) in enumerate(
+                [(0, 1), (0, 1), (0, 2), (1, 1), (1, 1), (1, 1), (1, 1), (2, 2)]
+            )
+        ],
+        "id long, image_id long, category_id int",
     )
     pred = spark.createDataFrame(
         [
-            (10, 0, 0.9), (11, 0, 0.6), (12, 0, 0.3),
-            (13, 1, 0.8), (14, 2, 0.5), (15, 3, 0.7),
+            (10, 0, 1, 0.9), (11, 0, 1, 0.6), (12, 0, 2, 0.3),
+            (13, 1, 1, 0.8), (14, 1, 1, None), (15, 2, 2, 0.5),
+            (16, 3, 1, 0.7),  # image 3: predictions only
+            (17, 4, 2, 0.1), (18, 4, 2, None),  # image 4: below most cuts
+            (19, 1, 2, 0.2),  # category 2 of image 1: no groundtruth
         ],
-        "id long, image_id long, confidence double",
+        "id long, image_id long, category_id int, confidence double",
     )
-    thresholds = [0.25, 0.55, 0.85]
-    curve = {
-        r.confidence: (r.mae, r.rmse)
-        for r in count_error_curve(gt, pred, thresholds).collect()
-    }
-    assert set(curve) == set(thresholds)
-    for t in thresholds:
-        ref = count_error_stats(per_image_counts(gt, pred, t)).collect()[0]
-        assert curve[t] == (ref.mae, ref.rmse), t
+    thresholds = [0.55, 0.25, 0.85, 0.55, 0.0]
+
+    def check(pred, group_cols):
+        # the curve and every per-threshold reference in one action
+        legs = [
+            count_error_curve(gt, pred, thresholds, group_cols)
+            .withColumn("curve", F.lit(True))
+        ] + [
+            count_error_stats(per_image_counts(gt, pred, t, group_cols), group_cols)
+            .withColumn("confidence", F.lit(t))
+            .withColumn("curve", F.lit(False))
+            for t in set(thresholds)
+        ]
+        rows = {True: [], False: []}
+        for r in functools.reduce(DataFrame.unionByName, legs).collect():
+            d = r.asDict()
+            rows[d.pop("curve")].append(sorted(d.items()))
+        assert sorted(rows[True], key=repr) == sorted(rows[False], key=repr), group_cols
+
+    check(pred, [])
+    check(pred, ["category_id"])
+    check(pred.drop("confidence"), ["category_id"])
 
 
 def test_crowd_evaluator_facade(tiny_dataset):
@@ -259,6 +283,98 @@ def test_ap_both_routing_probe(spark, monkeypatch):
     for k in small:
         assert big[k][0] == pytest.approx(small[k][0], abs=1e-9)
         assert big[k][1] == pytest.approx(small[k][1], abs=1e-9)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under Spark job group ``group``; return its result and
+    the ids of the jobs it started. A sentinel job in its own group
+    runs afterwards: the listener bus registers jobs in start order, so
+    once the sentinel is visible every job of ``fn`` is too."""
+    import time
+
+    sc = spark.sparkContext
+
+    def run(g, f):
+        sc.setJobGroup(g, g)
+        try:
+            return f()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    out = run(group, fn)
+    sentinel = f"{group}|sentinel"
+    run(sentinel, lambda: sc.parallelize([0], 1).count())
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    return out, sorted(tracker.getJobIdsForGroup(group))
+
+
+def test_functional_probe_is_the_materializing_action(spark):
+    """compute_precision_recall fills its curve checkpoint in the
+    row-count probe that routes ap_both: the call starts exactly the
+    jobs of one count() of the unmaterialized curve plan, with no
+    separate populating action before the probe."""
+    from lours_spark.evaluation import evaluator as ev
+    from lours_spark.evaluation.matching import compute_matches
+
+    gt = spark.createDataFrame(
+        [(i, i % 10, i % 2, 5.0 * (i % 6), 4.0 * (i % 5), 10.0, 8.0)
+         for i in range(60)],
+        "id long, image_id long, category_id int, box_x_min double,"
+        " box_y_min double, box_width double, box_height double",
+    )
+    pred = gt.select(
+        (F.col("id") + 1000).alias("id"), "image_id", "category_id",
+        (F.col("box_x_min") + 1.0).alias("box_x_min"), "box_y_min",
+        "box_width", "box_height",
+        ((F.col("id") % 13) / 13.0).alias("confidence"),
+    )
+    stats: dict = {}
+    _, call_jobs = _jobs_in_group(
+        spark, "pr-call",
+        lambda: ev.compute_precision_recall(gt, pred, ious=[0.3], stats=stats),
+    )
+    plan = ev.precision_recall_curves(
+        compute_matches(gt, pred), [0.3], ["category_id"]
+    )
+    n_rows, count_jobs = _jobs_in_group(spark, "pr-count", plan.count)
+    assert stats["n_curve_rows"] == n_rows
+    assert len(call_jobs) == len(count_jobs) > 0
+
+
+@pytest.mark.parametrize("rematch", [False, True])
+def test_facade_precision_recall_is_lazy(spark, tiny_dataset, rematch):
+    """DetectionEvaluator.compute_precision_recall builds only the
+    frames it returns and starts no Spark job until they are consumed;
+    its APs equal the functional compute_precision_recall's ``ap``."""
+    from lours_spark.evaluation.detection_evaluator import DetectionEvaluator
+    from lours_spark.evaluation.evaluator import compute_precision_recall
+
+    preds = tiny_dataset.from_template(
+        annotations=tiny_dataset.annotations.withColumn(
+            "id", F.col("id") + 10_000
+        )
+        .withColumn("confidence", ((F.col("id") % 10) + 1).cast("double") / 10.0)
+        .withColumn("box_x_min", F.col("box_x_min") + 1.0)
+    )
+    ev = DetectionEvaluator(tiny_dataset, model=preds)
+    (curves, aps), jobs = _jobs_in_group(
+        spark, f"facade-pr-{rematch}",
+        lambda: ev.compute_precision_recall(
+            ious=[0.2, 0.5], rematch_per_iou=rematch
+        ),
+    )
+    assert jobs == []
+    want = compute_precision_recall(
+        tiny_dataset.annotations, preds.annotations, ious=[0.2, 0.5],
+        rematch_per_iou=rematch,
+    )["ap"].withColumn("model", F.lit("model"))
+    assert aps.columns == want.columns
+    assert sorted(map(tuple, aps.collect())) == sorted(map(tuple, want.collect()))
+    assert curves.filter(~F.col("is_pad")).count() > 0
+    ev.clear_cache()
 
 
 def test_average_precisions_both_matches_window_forms(spark):
