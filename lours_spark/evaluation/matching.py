@@ -13,7 +13,7 @@ common case: ~4 boxes per image, millions of images). Instead we:
 
 1. ``repartition`` by image_id (hash — groups never straddle
    partitions) and ``sortWithinPartitions`` by the group key, then
-2. ``mapInPandas``: each Arrow batch covers MANY groups; group
+2. ``mapInArrow``: each Arrow record batch covers MANY groups; group
    boundaries are found with numpy change-detection and each group is
    sliced directly out of the batch's numpy arrays — per-group cost is
    a few microseconds of slicing plus the numpy kernel, not a pandas
@@ -648,7 +648,7 @@ def compute_matches(
     """Distributed match computation (reference
     ``detection_evaluator.py:54-179``): concat gt+pred with a flag, one
     hash shuffle on image_id, in-partition sort by group key, then the
-    batched numpy kernel via ``mapInPandas``.
+    batched numpy kernel via ``mapInArrow``.
 
     ``min_iou``: greedy acceptance threshold (strict ``iou > min_iou``,
     the reference's convention — for COCO-protocol ``iou >= t``

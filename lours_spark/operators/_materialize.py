@@ -24,12 +24,16 @@ session-lifetime CacheManager entry — callers on such clusters should
 ``spark.catalog.clearCache()`` (or unpersist by plan) at pipeline
 boundaries.
 
-``eager=False`` marks the checkpoint without running a materializing
-job: the first downstream action that touches all partitions
-materializes it as a side effect — one fewer serial job wave. Use it
-when such an action is guaranteed; an eager site pays one extra job
-but is safe under partial-consumption plans (e.g. a broadcast-build
-that only reads some partitions first). ``eager`` only applies to
+``eager=False`` defers only the final result stage: building the
+checkpoint RDD still runs the plan's shuffle map stages at call time
+(on Spark 4.1.2 with AQE, a group-by frame starts one job inside the
+call and two more on its first ``count()``). The first downstream
+action that touches all partitions then writes the checkpoint blocks
+as a side effect — it saves the separate populating job, not the
+upstream shuffle work. Use it when such an action is guaranteed; an
+eager site pays one extra job but is safe under partial-consumption
+plans (e.g. a broadcast-build that only reads some partitions
+first). ``eager`` only applies to
 ``localCheckpoint``: under ``cache`` the populating ``count()`` always
 runs, because branches of one downstream action would otherwise race
 the unpopulated cache and each recompute ``df``.

@@ -5,8 +5,10 @@ Five strategies, all built on shuffle-minimal Spark plans:
 - **exact**: hash-groupBy on a normalized fingerprint — one shuffle on
   a 16-byte key regardless of document size;
 - **MinHash + LSH**: shingle → per-doc signature (no shuffle) → band
-  keys → bucket self-join → Jaccard verification of candidates only.
-  At 100 TB the bucket join shuffles signatures (tiny) not documents;
+  keys → one bucket groupBy + pair fan-out → Jaccard verification of
+  candidates only (``_bucket_pairs`` + ``_verify_pairs``, shared with
+  the embedding sign-LSH miners). At 100 TB the bucket shuffle moves
+  signatures (tiny), not documents;
 - **SimHash**: near-dup candidates = identical simhash values (or
   rotated-band variants);
 - **n-gram Jaccard**: exact similarity join via shingle inverted index
@@ -29,8 +31,7 @@ from lours_spark.functions import text as TX
 from lours_spark.functions import vectors as V
 
 
-# the ONE widen policy (r12: was a verbatim copy of
-# operators._widen.widen; see that module for the policy + scale notes)
+# the ONE widen policy: see operators._widen for the policy + scale notes
 from lours_spark.operators._materialize import materialize  # noqa: E402
 from lours_spark.operators._widen import widen as _widen  # noqa: E402
 
@@ -452,20 +453,26 @@ def _cap_bucket_rows(
     oversize: str = "skip",
 ) -> "tuple[DataFrame, DataFrame, DataFrame | None]":
     """Split bucket-member rows into (kept, dropped, star) around a
-    hot-bucket cap. Bucket sizes come from a window count over the SAME
-    keys the downstream ``groupBy`` clusters on, so the filter costs no
-    extra exchange AND — the point — an oversized bucket is cut BEFORE
-    its ``collect_list`` row ever materializes (a 10⁶-member boilerplate
-    bucket would otherwise be a multi-MB aggregation row feeding 10¹²
-    candidate pairs).
+    hot-bucket cap — the ``max_bucket_size`` guard of every LSH miner.
+    Per-bucket candidate fan-out is quadratic in bucket size, so ONE
+    bucket holding a 10⁶-member boilerplate family (or a mass-duplicated
+    embedding, one bucket per table) is 10¹² pairs and a multi-MB
+    ``collect_list`` row; in an incremental index such a bucket grows
+    with corpus age, not batch size. Bucket sizes come from a window
+    count over the SAME keys the downstream ``groupBy`` clusters on, so
+    the filter costs no extra exchange AND — the point — an oversized
+    bucket is cut BEFORE its ``collect_list`` row ever materializes.
 
     ``kept`` is the member rows of buckets with 2..max size (singleton
     buckets pair with nothing — pre-cut here too). ``dropped`` is one
     row per oversized bucket ``(*key_cols, bucket_size)`` — the
-    no-silent-caps ledger; when ``has_new_col`` names a boolean member
-    flag, only oversized buckets that CONTAIN a flagged member are
-    reported (an all-old oversized bucket forfeits no pair in the
-    incremental miner).
+    no-silent-caps ledger the miners return with
+    ``return_dropped=True`` (count it, log it, or feed the member docs
+    to :func:`exact_duplicates`: near-identical mega families are best
+    pre-collapsed by exact fingerprint before shingling); when
+    ``has_new_col`` names a boolean member flag, only oversized buckets
+    that CONTAIN a flagged member are reported (an all-old oversized
+    bucket forfeits no pair in the incremental miner).
 
     ``oversize`` decides what an oversized bucket FORFEITS:
 
@@ -473,14 +480,15 @@ def _cap_bucket_rows(
       byte-identical legacy mode every gate query runs.
     - ``"star"``: emit ``(min_id, member)`` candidate pairs — one per
       member, O(bucket) not O(bucket²) — as the third return frame
-      (columns ``id_a < id_b``). The caller unions them into its
-      candidate set, so the exact verify stage prices them and
+      (columns ``id_a < id_b``). :func:`_bucket_pairs` unions them into
+      the candidate set, so the exact verify stage prices them and
       connected components then collapses a verified mega-family into
       ONE cluster even with the cap active — the crawl-dedup behavior
       a boilerplate family needs. The hub min-id comes from a window
       min over the same keys (no extra exchange). With ``has_new_col``,
       only pairs with a new side are emitted (old×old hub pairs were
-      mined when those members were new).
+      mined when those members were new). A ledger row then means
+      "quadratic fan-out withheld", not "no pairs emitted".
 
     ``star`` is ``None`` when ``oversize="skip"`` (validation happens
     in :func:`_check_oversize` at the public entries)."""
@@ -524,6 +532,109 @@ def _cap_bucket_rows(
     return kept, dropped, star
 
 
+def _bucket_pairs(
+    rows: DataFrame,
+    key_cols: "tuple[str, ...]",
+    max_bucket_size: "int | None",
+    oversize: str,
+    new_col: "str | None" = None,
+) -> "tuple[DataFrame, DataFrame]":
+    """Bucket-member rows ``(__id, *key_cols[, new_col])`` → (distinct
+    candidate pairs ``id_a < id_b``, over-cap-bucket ledger) — the
+    candidate stage of every LSH miner.
+
+    ONE ``groupBy`` on the bucket key collects each bucket's ids and a
+    narrow JVM-side double-explode fans them out into pairs: a
+    self-join on the key would re-walk the signature subtree once per
+    leg (exchange reuse does not cover map-side Python stages). With
+    ``max_bucket_size`` the rows pass :func:`_cap_bucket_rows` first and
+    its star pairs join the candidates; without a cap the ledger is the
+    empty ``(*key_cols, bucket_size)`` frame, typed from ``rows`` (its
+    ``limit(0)`` plan folds to an empty local relation, so reading it
+    never runs the signature pass).
+
+    ``new_col`` names a boolean member flag (rows of a new batch mined
+    against an index): only buckets with a flagged member fan out — the
+    all-old ones are dropped before the explode — and only pairs with a
+    flagged side are kept; old×old pairs were mined when those rows
+    were new."""
+    if max_bucket_size is None:
+        star = None
+        dropped = rows.select(
+            *key_cols, F.lit(0).cast("long").alias("bucket_size")
+        ).limit(0)
+    else:
+        rows, dropped, star = _cap_bucket_rows(
+            rows, key_cols, max_bucket_size,
+            has_new_col=new_col, oversize=oversize,
+        )
+    member, flags, keep = F.col("__id"), [], F.size("__m") > 1
+    if new_col is not None:
+        member = F.struct("__id", new_col)
+        flags = [F.max(F.col(new_col).cast("int")).alias("__has_new")]
+        keep = keep & (F.col("__has_new") == 1)
+    buckets = (
+        rows.groupBy(*key_cols)
+        .agg(F.collect_list(member).alias("__m"), *flags)
+        .filter(keep)
+    )
+
+    # the exploded sides are the pair ids themselves, or member structs
+    a, b = ("id_a", "id_b") if new_col is None else ("a", "b")
+    fan = buckets.select(F.explode("__m").alias(a), "__m").select(
+        a, F.explode("__m").alias(b)
+    )
+    if new_col is None:
+        candidates = fan.filter(F.col("id_a") < F.col("id_b"))
+    else:
+        candidates = (
+            fan.filter(F.col("a.__id") < F.col("b.__id"))
+            .filter(F.col(f"a.{new_col}") | F.col(f"b.{new_col}"))
+            .select(
+                F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b")
+            )
+        )
+    if star is not None:
+        candidates = candidates.unionByName(star)
+    # a pair may share several buckets (bands / tables)
+    return candidates.distinct(), dropped
+
+
+def _verify_pairs(
+    candidates: DataFrame,
+    payload: DataFrame,
+    score,
+    threshold: float,
+    score_name: str,
+) -> DataFrame:
+    """Exact verification of candidate pairs — the last stage of every
+    near-dup miner: fetch both sides' ``__p`` from the ``(__id, __p)``
+    payload frame by id (two joins that ship only candidate ids'
+    payloads), score them with ``score(pa, pb) -> Column`` and keep
+    ``(id_a, id_b, score_name)`` rows scoring ``>= threshold``."""
+    pa = payload.select(F.col("__id").alias("id_a"), F.col("__p").alias("__pa"))
+    pb = payload.select(F.col("__id").alias("id_b"), F.col("__p").alias("__pb"))
+    return (
+        candidates.join(pa, "id_a")
+        .join(pb, "id_b")
+        .withColumn(score_name, score(F.col("__pa"), F.col("__pb")))
+        .filter(F.col(score_name) >= threshold)
+        .select("id_a", "id_b", score_name)
+    )
+
+
+def _jaccard(a, b):
+    """Exact set Jaccard of two shingle-set array columns."""
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(
+        F.array_union(a, b)
+    )
+
+
+def _vec_payload(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The ``(__id, __p)`` verify payload of a vector frame."""
+    return df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__p"))
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -552,31 +663,14 @@ def minhash_lsh_pairs(
     only candidate recall depends on the hash family, identically in
     distribution.
 
-    ``max_bucket_size`` — the hot-bucket guard for crawl-shaped data:
-    per-bucket candidate fan-out is quadratic in bucket size, so ONE
-    band bucket holding a 10⁶-member boilerplate family is 10¹² pairs
-    and a multi-MB ``collect_list`` row. With a cap, buckets larger
-    than this many members are skipped BEFORE the collect (a window
-    count over the same bucket key — no extra exchange) and reported:
-    pass ``return_dropped=True`` to also get the over-cap-bucket
-    ledger ``(band, band_key, bucket_size)`` (with ``oversize="star"``
-    those buckets are capped to hub pairs, not fully forfeited — the
-    ledger row means "quadratic fan-out withheld", not "no pairs
-    emitted") — count it, log it, or feed the
-    member docs to :func:`exact_duplicates`; near-identical mega
-    families are better pre-collapsed by exact fingerprint BEFORE
-    shingling anyway (one survivor per family keeps recall, kills the
-    hot bucket at the source). ``None`` (default) = uncapped, the
-    oracle-gated plan, byte-identical to previous rounds.
+    ``max_bucket_size`` / ``return_dropped`` / ``oversize``: the
+    hot-bucket guard — buckets over the cap are skipped (or, with
+    ``oversize="star"``, reduced to hub pairs) before their collect,
+    and ``return_dropped=True`` also returns the ``(band, band_key,
+    bucket_size)`` ledger, empty when uncapped; see
+    :func:`_cap_bucket_rows`.
 
-    ``oversize`` (requires a cap): ``"skip"`` forfeits ALL pairs of an
-    oversized bucket (ledger-only, the default); ``"star"`` keeps the
-    family collapsible at O(bucket) cost — each member becomes a
-    candidate pair with the bucket's min id, the exact-jaccard verify
-    prices those like any candidate, and connected components then
-    lands the family in ONE cluster (see :func:`_cap_bucket_rows`).
-
-    EXECUTES EAGERLY (r11): the shingle+minhash signature pass runs a
+    Runs eagerly: the shingle+minhash signature pass runs a
     distributed job AT CALL TIME (the signature frame is materialized
     once because three legs of the pairs plan consume it — see
     ``operators/_materialize.py``, including the executor-loss caveat
@@ -589,72 +683,22 @@ def minhash_lsh_pairs(
     sig = _minhash_agg(
         df, id_col, text_col, k, num_hashes, hash_fn=hash_fn
     ).withColumnRenamed(id_col, "__id")
-    # materialize once, NOT cache() (r11): the band explode and BOTH
-    # verify legs (sa/sb) consume this subtree inside one action, and
-    # branches of one action race an unpopulated cache — the dominant
-    # md5-minhash pass ran up to 3×. The eager checkpoint materializes
-    # it exactly once, and its blocks are freed by the ContextCleaner
-    # when the result frame drops (a CacheManager entry from this
-    # function-local frame had no unpersist path and leaked for the
-    # session's life — the embedding-LSH path's precedent below).
-    # Strategy + executor-loss caveat: operators/_materialize.py (r12).
+    # materialize once: the band explode and BOTH verify legs read
+    # this subtree inside one action, which would otherwise re-run the
+    # dominant minhash pass per leg (why a checkpoint and not cache():
+    # operators/_materialize.py)
     sig = materialize(sig, eager=True)
-    band_rows = _band_rows(sig, bands, rows_per_band)
-    # bucket via ONE groupBy instead of a self-join: the join's two
-    # legs each re-walk the (cached, but population-racing) signature
-    # subtree; the groupBy shape scans it once and fans out pairs with
-    # a narrow JVM-side double-explode (same shape as the embedding
-    # LSH path)
-    dropped = star = None
-    if max_bucket_size is not None:
-        band_rows, dropped, star = _cap_bucket_rows(
-            band_rows, ("band", "band_key"), max_bucket_size,
-            oversize=oversize,
-        )
-    buckets = (
-        band_rows.groupBy("band", "band_key")
-        .agg(F.collect_list("__id").alias("__ids"))
-        .filter(F.size("__ids") > 1)
+    candidates, dropped = _bucket_pairs(
+        _band_rows(sig, bands, rows_per_band), ("band", "band_key"),
+        max_bucket_size, oversize,
     )
-    candidates = (
-        buckets.select(F.explode("__ids").alias("id_a"), "__ids")
-        .select("id_a", F.explode("__ids").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    if star is not None:
-        candidates = candidates.unionByName(star)
-    candidates = candidates.distinct()
-    sa = sig.select(F.col("__id").alias("id_a"), F.col("__shingles").alias("__sh_a"))
-    sb = sig.select(F.col("__id").alias("id_b"), F.col("__shingles").alias("__sh_b"))
-    verified = (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-            / F.size(F.array_union("__sh_a", "__sh_b")),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
+    verified = _verify_pairs(
+        candidates, sig.select("__id", F.col("__shingles").alias("__p")),
+        _jaccard, jaccard_threshold, "jaccard",
     )
     if return_dropped:
-        return verified, _empty_dropped(
-            df.sparkSession, ("band", "band_key"), dropped
-        )
+        return verified, dropped
     return verified
-
-
-def _empty_dropped(spark, key_cols, dropped):
-    """The dropped-bucket frame, or its empty twin when no cap was set
-    (``return_dropped=True`` always returns a frame of the same shape
-    so callers can count/write it unconditionally)."""
-    if dropped is not None:
-        return dropped
-    fields = ", ".join(
-        f"{c} {'int' if c in ('band', 'table') else 'string' if c == 'band_key' else 'long'}"
-        for c in key_cols
-    )
-    return spark.createDataFrame([], f"{fields}, bucket_size long")
 
 
 def build_minhash_index(
@@ -754,20 +798,11 @@ def minhash_lsh_pairs_incremental(
     new batch's index frame to append to the stored index for the next
     batch.
 
-    ``max_bucket_size`` / ``return_dropped``: the hot-bucket guard —
-    see :func:`minhash_lsh_pairs`. The incremental miner is where the
-    guard matters most: a steady-state index concentrates every
-    boilerplate family ever ingested into the same band buckets, so an
-    uncapped bucket's ``collect_list`` row grows with CORPUS age, not
-    batch size. With ``return_dropped=True`` a third frame is returned
-    reporting each skipped bucket ``(band, band_key, bucket_size)`` —
-    only oversized buckets actually CONTAINING a new member (an
-    all-old oversized bucket forfeits no pair). ``oversize="star"``
-    additionally emits member↔min-id candidate pairs for oversized
-    buckets (new-sided only — old×old hub pairs were mined when those
-    members were new), so an indexed boilerplate family keeps
-    absorbing new members into one cluster at O(bucket) cost (see
-    :func:`_cap_bucket_rows`).
+    ``max_bucket_size`` / ``return_dropped`` / ``oversize``: the
+    hot-bucket guard of :func:`minhash_lsh_pairs`, new-sided (only
+    buckets with a new member are reported or starred); with
+    ``return_dropped=True`` the ``(band, band_key, bucket_size)``
+    ledger is a third return frame; see :func:`_cap_bucket_rows`.
 
     Scale shape: the new batch is shingled once (the only text work);
     the index contributes a NARROW projection (id + n signature longs
@@ -781,17 +816,13 @@ def minhash_lsh_pairs_incremental(
     ``new_docs`` ids must be disjoint from the index's (enforce
     upstream; an id on both sides would self-pair at jaccard 1.0).
 
-    Materialization: the returned ``new_index_rows`` frame is eagerly
-    ``localCheckpoint``ed here — the pairs plan reads it on THREE legs
-    (band explode + both shingle-fetch sides) inside one action, and
-    branches of one action race an unpopulated cache, so a plain
-    ``cache()`` ran the batch's shingle+minhash pass up to 3×. The
-    caller's index append reads the same checkpointed blocks; a
-    caller ``unpersist()`` (the old contract) is now a harmless no-op
-    — blocks are freed by the ContextCleaner when the frame drops.
-    Consequently the batch's signature pass EXECUTES EAGERLY at call
-    time; strategy knob + executor-loss caveat in
-    ``operators/_materialize.py``.
+    Materialization: the returned ``new_index_rows`` frame is
+    materialized here (strategy, executor-loss caveat and why not
+    ``cache()``: ``operators/_materialize.py``) — the pairs plan reads
+    it on THREE legs (band explode + both shingle-fetch sides) and the
+    caller's index append reads it again, so the batch's
+    shingle+minhash pass runs once, eagerly, at call time. A caller
+    ``unpersist()`` is a no-op under the default strategy.
     """
     _check_oversize(oversize, max_bucket_size)
     rows_per_band = num_hashes // bands
@@ -805,55 +836,16 @@ def minhash_lsh_pairs_incremental(
     )
     # the __new flag rides the band explode — a join back to sig would
     # re-scan the parquet index side a second time just to re-attach it
-    band_rows = _band_rows(sig, bands, rows_per_band, carry=("__new",))
-    dropped = star = None
-    if max_bucket_size is not None:
-        band_rows, dropped, star = _cap_bucket_rows(
-            band_rows, ("band", "band_key"), max_bucket_size,
-            has_new_col="__new", oversize=oversize,
-        )
-    buckets = (
-        band_rows.groupBy("band", "band_key")
-        .agg(
-            F.collect_list(F.struct("__id", "__new")).alias("__m"),
-            F.max(F.col("__new").cast("int")).alias("__has_new"),
-        )
-        # all-old buckets carry no new pair — drop BEFORE the fan-out
-        .filter((F.size("__m") > 1) & (F.col("__has_new") == 1))
+    candidates, dropped = _bucket_pairs(
+        _band_rows(sig, bands, rows_per_band, carry=("__new",)),
+        ("band", "band_key"), max_bucket_size, oversize, new_col="__new",
     )
-    candidates = (
-        buckets.select(F.explode("__m").alias("a"), "__m")
-        .select("a", F.explode("__m").alias("b"))
-        .filter(F.col("a.__id") < F.col("b.__id"))
-        .filter(F.col("a.__new") | F.col("b.__new"))
-        .select(
-            F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b")
-        )
-    )
-    if star is not None:
-        candidates = candidates.unionByName(star)
-    candidates = candidates.distinct()
-    sa = sig.select(
-        F.col("__id").alias("id_a"), F.col("__shingles").alias("__sh_a")
-    )
-    sb = sig.select(
-        F.col("__id").alias("id_b"), F.col("__shingles").alias("__sh_b")
-    )
-    pairs = (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("__sh_a", "__sh_b")).cast("double")
-            / F.size(F.array_union("__sh_a", "__sh_b")),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
+    pairs = _verify_pairs(
+        candidates, sig.select("__id", F.col("__shingles").alias("__p")),
+        _jaccard, jaccard_threshold, "jaccard",
     )
     if return_dropped:
-        return pairs, new_sig, _empty_dropped(
-            new_docs.sparkSession, ("band", "band_key"), dropped
-        )
+        return pairs, new_sig, dropped
     return pairs, new_sig
 
 
@@ -987,7 +979,7 @@ def _lsh_sizing(
     count() (a fixed r is a scale cliff — see
     :func:`embedding_near_duplicates`); ``num_tables=None`` → the L
     that ``target_recall`` implies at the threshold angle, clamped to
-    [4, 64] with a loud warning at saturation (ADVICE r7)."""
+    [4, 64] with a loud warning at saturation."""
     import math
 
     auto_r = planes_per_table is None
@@ -1007,7 +999,7 @@ def _lsh_sizing(
             # auto-r grows with the corpus, so the table count the
             # recall target implies can silently saturate the L≤64
             # clamp — say so instead of under-delivering recall
-            # without a signal (ADVICE r7)
+            # without a signal
             import warnings
 
             warnings.warn(
@@ -1201,26 +1193,19 @@ def embedding_near_dup_pairs_incremental(
     whose members are all old are dropped BEFORE the pair fan-out, so
     steady-state cost per batch is ~|new| × bucket-mates, not
     |corpus|². ``max_bucket_size`` / ``return_dropped`` / ``oversize``:
-    the same hot-bucket guard as every LSH candidate stage (a
-    mass-duplicated embedding — zero vectors, template pages —
-    concentrates the whole family into one bucket PER TABLE, and an
-    indexed family grows with corpus age, not batch size);
-    ``oversize="star"`` keeps capped families collapsible at O(bucket)
-    cost, new-sided pairs only (see :func:`_cap_bucket_rows`).
+    the new-sided hot-bucket guard of
+    :func:`minhash_lsh_pairs_incremental` over ``(table, sig)``
+    buckets, ledger ``(table, sig, bucket_size)``; see
+    :func:`_cap_bucket_rows`.
 
     ``new_docs`` ids must be disjoint from the index's (enforce
     upstream; an id on both sides would self-pair at cosine 1.0).
 
-    Materialization: the returned ``new_index_rows`` frame is eagerly
-    ``localCheckpoint``ed here (both the pairs plan — on multiple
-    legs inside one action, which race a plain cache — and the
-    caller's index append read it; uncached, the Arrow hashing pass
-    ran once per leg). A caller ``unpersist()`` (the old contract) is
-    a harmless no-op — checkpoint blocks are freed by the
-    ContextCleaner when the frame drops, so a driver loop cannot
-    accumulate cached frames per batch either. Consequently the
-    batch's Arrow hashing pass EXECUTES EAGERLY at call time; strategy
-    knob + executor-loss caveat in ``operators/_materialize.py``.
+    Materialization: the returned ``new_index_rows`` frame is
+    materialized here, as in :func:`minhash_lsh_pairs_incremental` —
+    the pairs plan reads it on several legs and the caller's index
+    append reads it again, so the batch's Arrow hashing pass runs
+    once, eagerly, at call time.
     """
     _check_oversize(oversize, max_bucket_size)
     meta = _emb_index_meta(index)
@@ -1246,48 +1231,16 @@ def embedding_near_dup_pairs_incremental(
         "__new",
         F.posexplode("__sigs").alias("table", "sig"),
     )
-    dropped = star = None
-    if max_bucket_size is not None:
-        sig_rows, dropped, star = _cap_bucket_rows(
-            sig_rows, ("table", "sig"), max_bucket_size,
-            has_new_col="__new", oversize=oversize,
-        )
-    buckets = (
-        sig_rows.groupBy("table", "sig")
-        .agg(
-            F.collect_list(F.struct("__id", "__new")).alias("__m"),
-            F.max(F.col("__new").cast("int")).alias("__has_new"),
-        )
-        .filter((F.size("__m") > 1) & (F.col("__has_new") == 1))
+    candidates, dropped = _bucket_pairs(
+        sig_rows, ("table", "sig"), max_bucket_size, oversize,
+        new_col="__new",
     )
-    candidates = (
-        buckets.select(F.explode("__m").alias("a"), "__m")
-        .select("a", F.explode("__m").alias("b"))
-        .filter(F.col("a.__id") < F.col("b.__id"))
-        .filter(F.col("a.__new") | F.col("b.__new"))
-        .select(
-            F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b")
-        )
-    )
-    if star is not None:
-        candidates = candidates.unionByName(star)
-    candidates = candidates.distinct()
-    va = both.select(F.col("__id").alias("id_a"), F.col("__vec").alias("__va"))
-    vb = both.select(F.col("__id").alias("id_b"), F.col("__vec").alias("__vb"))
-    pairs = (
-        candidates.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn(
-            "cosine",
-            V.cosine_similarity_arrow()(F.col("__va"), F.col("__vb")),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    pairs = _verify_pairs(
+        candidates, both.select("__id", F.col("__vec").alias("__p")),
+        V.cosine_similarity_arrow(), threshold, "cosine",
     )
     if return_dropped:
-        return pairs, new_idx, _empty_dropped(
-            new_docs.sparkSession, ("table", "sig"), dropped
-        )
+        return pairs, new_idx, dropped
     return pairs, new_idx
 
 
@@ -1311,22 +1264,15 @@ def embedding_near_duplicates(
 
     ``max_bucket_size`` / ``return_dropped`` / ``oversize``
     (``method="lsh"`` only — a cap on the other methods raises): the
-    hot-bucket guard of :func:`minhash_lsh_pairs`, here over the
-    (table, sig) sign-LSH buckets. An embedding corpus with a
-    mass-duplicated vector (a default/zero embedding, a template page)
-    concentrates it into one bucket PER TABLE; the cap skips those
-    buckets before their ``collect_list`` row forms and
-    ``return_dropped=True`` returns the ``(table, sig, bucket_size)``
-    ledger alongside the pairs. ``oversize="star"`` keeps a capped
-    family collapsible — member↔min-id candidates at O(bucket) cost
-    (see :func:`_cap_bucket_rows`); a ledger row then means "quadratic
-    fan-out withheld", not "no pairs emitted from this bucket".
+    hot-bucket guard of :func:`minhash_lsh_pairs` over the ``(table,
+    sig)`` sign-LSH buckets, ledger ``(table, sig, bucket_size)``; see
+    :func:`_cap_bucket_rows`.
 
     ``method="lsh"`` (default — the 100 TB path): banded
     random-hyperplane sign LSH. Each vector gets ``num_tables``
     signatures of ``planes_per_table`` sign bits (one Arrow-batched
     BLAS pass, planes derived from ``seed``); vectors colliding in ANY
-    table become candidate pairs via a bucket self-join (shuffle on
+    table become candidate pairs via a bucket groupBy (shuffle on
     (table, signature) only — never all-pairs, no driver collect, no
     corpus broadcast). Candidates are then re-verified with the exact
     sequential-order cosine expression, so every emitted pair truly
@@ -1417,15 +1363,11 @@ def embedding_near_duplicates(
     candidates = df.select(id_col, vec_col).mapInPandas(
         block, "id_a long, id_b long"
     )
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-    return (
-        candidates.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", V.cosine_similarity_arrow()(F.col("__va"), F.col("__vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    return _verify_pairs(
+        candidates, _vec_payload(df, id_col, vec_col),
+        V.cosine_similarity_arrow(), threshold, "cosine",
     )
+
 
 
 def _embedding_near_dup_ivf(
@@ -1496,14 +1438,9 @@ def _embedding_near_dup_ivf(
         .select("id_a", "id_b")
         .distinct()  # pairs may share several probed centroids
     )
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-    return (
-        candidates.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", V.cosine_similarity_arrow()(F.col("__va"), F.col("__vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    return _verify_pairs(
+        candidates, _vec_payload(df, id_col, vec_col),
+        V.cosine_similarity_arrow(), threshold, "cosine",
     )
 
 
@@ -1522,7 +1459,7 @@ def _embedding_near_dup_lsh(
     """Banded sign-LSH candidate generation + exact cosine verify (see
     :func:`embedding_near_duplicates`). One mapInPandas pass computes
     every table signature with a single (batch × planes) BLAS product;
-    the only shuffles are the (table, signature) bucket self-join on
+    the only shuffles are the (table, signature) bucket groupBy on
     tiny signature rows and the verify join back to vectors."""
     import numpy as np
     import pandas as pd
@@ -1552,55 +1489,21 @@ def _embedding_near_dup_lsh(
     sig = df.select(id_col, vec_col).mapInPandas(
         signatures, "__id long, table int, sig long"
     )
-    # bucket via ONE groupBy instead of a self-join: the join's two
-    # legs would re-execute the signature mapInPandas once each
-    # (exchange reuse does not cover map-side Python stages), doubling
-    # the dominant BLAS pass and adding a shuffle. Pair fan-out within
-    # a bucket is a narrow double-explode, JVM-side.
-    dropped = star = None
-    if max_bucket_size is not None:
-        if oversize == "star" or return_dropped:
-            # the star leg / the dropped-ledger action and the bucket
-            # groupBy are separate consumers of the signature subtree;
-            # exchange reuse does not cover map-side Python stages, so
-            # an unmaterialized sig would run the dominant BLAS pass
-            # once per consumer. localCheckpoint, NOT cache(): a
-            # CacheManager entry from a function-local frame has no
-            # unpersist path and leaks for the session's life, while
-            # checkpoint blocks are freed by the ContextCleaner once
-            # the caller drops the returned frames (the quality.py
-            # per_bucket precedent). Strategy + executor-loss caveat:
-            # operators/_materialize.py (r12).
-            sig = materialize(sig, eager=True)
-        sig, dropped, star = _cap_bucket_rows(
-            sig, ("table", "sig"), max_bucket_size, oversize=oversize
-        )
-    buckets = (
-        sig.groupBy("table", "sig")
-        .agg(F.collect_list("__id").alias("__ids"))
-        .filter(F.size("__ids") > 1)
+    if max_bucket_size is not None and (oversize == "star" or return_dropped):
+        # the star leg / the ledger action and the bucket groupBy each
+        # consume the signature subtree, and exchange reuse does not
+        # cover map-side Python stages: materialize so the dominant
+        # BLAS pass runs once (operators/_materialize.py)
+        sig = materialize(sig, eager=True)
+    candidates, dropped = _bucket_pairs(
+        sig, ("table", "sig"), max_bucket_size, oversize
     )
-    candidates = (
-        buckets.select(F.explode("__ids").alias("id_a"), "__ids")
-        .select("id_a", F.explode("__ids").alias("id_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-    if star is not None:
-        candidates = candidates.unionByName(star)
-    candidates = candidates.distinct()  # a pair may collide in several tables
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
-    verified = (
-        candidates.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", V.cosine_similarity_arrow()(F.col("__va"), F.col("__vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    verified = _verify_pairs(
+        candidates, _vec_payload(df, id_col, vec_col),
+        V.cosine_similarity_arrow(), threshold, "cosine",
     )
     if return_dropped:
-        return verified, _empty_dropped(
-            df.sparkSession, ("table", "sig"), dropped
-        )
+        return verified, dropped
     return verified
 
 
@@ -1667,7 +1570,7 @@ def semantic_dedup(
             F.sequence(F.lit(0), F.lit(C - 1)),
             lambda d, i: F.struct(d.alias("d"), i.alias("i")),
         )
-        # corpus-side widen (r11): the interpreted C×dim argmin fold
+        # corpus-side widen: the interpreted C×dim argmin fold
         # runs before the cluster-key exchange, i.e. on the scan's
         # partitions — single-task on a one-file corpus; no-op at scale
         assigned = _widen(df).withColumn(

@@ -784,11 +784,12 @@ def train_ngram_classifier(
             F.sum(1 - F.col("__y")).alias("__neg"),
         )
     )
-    # LAZY materialization: the tot aggregate right below consumes
-    # every partition, so the checkpoint blocks are pinned by that same
-    # action — eager=True paid one extra serial job wave for the same
-    # guarantee. Strategy + executor-loss caveat:
-    # operators/_materialize.py (r12).
+    # deferred result stage: the corpus-aggregation shuffle still runs
+    # at the materialize call, but the tot aggregate right below
+    # consumes every partition, so that same action writes the
+    # checkpoint blocks — eager=True paid one extra populating job for
+    # the same guarantee. Strategy + executor-loss caveat:
+    # operators/_materialize.py.
     from lours_spark.operators._materialize import materialize
 
     per_bucket = materialize(per_bucket, eager=False)

@@ -645,10 +645,13 @@ def _start_incremental_miner(
                 os.path.join(pairs_dir, f"dropped-{tag}")
             )
         new_idx.write.mode("overwrite").parquet(os.path.join(index_dir, tag))
-        # the operators cache the new batch's signature frame so the
-        # pair mining and the index write share one hashing pass; drop
-        # it now or a long-lived stream accumulates a cached frame per
-        # micro-batch
+        # the operators materialize the new batch's signature frame so
+        # the pair mining and the index write share one hashing pass.
+        # Under the default localCheckpoint strategy this is a no-op
+        # (the ContextCleaner frees the blocks once the frame drops);
+        # under spark.lours.materialize=cache it frees the batch's
+        # cached frame, which a long-lived stream would otherwise
+        # accumulate per micro-batch
         new_idx.unpersist()
         if (
             compact_every is not None

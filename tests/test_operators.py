@@ -1711,6 +1711,48 @@ def test_embedding_hot_bucket_cap(spark):
         )
 
 
+@pytest.mark.parametrize("family", ["minhash", "embedding"])
+@pytest.mark.parametrize("incremental", [False, True])
+def test_lsh_uncapped_ledger_is_empty_and_typed(spark, family, incremental):
+    """``return_dropped=True`` without a cap returns an EMPTY ledger
+    whose schema (names, types, nullability) equals the capped ledger's
+    on the same planted mega-family input, so callers can count, union
+    or write it unconditionally — for all four LSH miners."""
+    from lours_spark.operators import dedup as D
+
+    if family == "minhash":
+        df, col, split, kw = _hot_bucket_docs(spark, mega=12), "doc_id", 8, {}
+        one_shot, build, mine_new = (
+            D.minhash_lsh_pairs, D.build_minhash_index,
+            D.minhash_lsh_pairs_incremental,
+        )
+    else:
+        rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(20)]
+        rows += [(1000, [0.0, 1.0, 0.001, 0.0]), (1001, [0.0, 1.0, 0.0, 0.001])]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        col, split = "vec_id", 15
+        kw = dict(id_col=col, threshold=0.99, num_tables=4, planes_per_table=8)
+        one_shot, build, mine_new = (
+            D.embedding_near_duplicates, D.build_embedding_index,
+            D.embedding_near_dup_pairs_incremental,
+        )
+
+    def ledger(**cap):
+        if not incremental:
+            return one_shot(df, return_dropped=True, **kw, **cap)[-1]
+        # the batch holds members of the planted family
+        index = build(df.filter(F.col(col) < split), **kw)
+        return mine_new(
+            df.filter(F.col(col) >= split), index, return_dropped=True,
+            **kw, **cap,
+        )[-1]
+
+    uncapped, capped = ledger(), ledger(max_bucket_size=5)
+    assert uncapped.count() == 0
+    assert capped.count() > 0  # the planted family is over the cap
+    assert uncapped.schema == capped.schema
+
+
 def test_embedding_lsh_table_clamp_warns(spark):
     """When the recall target implies more than the 64-table clamp
     (low threshold + auto-sized planes), the saturation is surfaced as

@@ -236,14 +236,23 @@ def test_repetition_signals_partial_aggregation(spark, suite):
     assert "BatchEvalPython" not in plan  # no row UDFs anywhere
 
 
-def test_lsh_candidate_stages_run_once(spark, suite):
-    """Round-4 shapes: LSH candidate generation must be a single scan
-    of the signature stage (groupBy bucket + narrow double-explode),
-    never a self-join whose legs re-execute it — one MapInPandas node
-    for the embedding path, one shingle-HOF walk for ngram Jaccard."""
+def test_lsh_candidate_stages_run_once(spark, suite, tmp_path):
+    """Bucket-groupBy candidate shapes: LSH candidate generation must
+    be a single scan of the signature stage (groupBy bucket + narrow
+    double-explode), never a self-join whose legs re-execute it — one
+    MapInPandas node for the embedding path, one shingle-HOF walk for
+    ngram Jaccard, and no Python stage at all in the incremental pair
+    plans against a stored index (the batch's signature pass is
+    materialized at call time)."""
+    from pyspark.sql import functions as F
+
     from lours_spark.operators.dedup import (
+        build_embedding_index,
+        build_minhash_index,
+        embedding_near_dup_pairs_incremental,
         embedding_near_duplicates,
         minhash_lsh_pairs,
+        minhash_lsh_pairs_incremental,
         ngram_jaccard_pairs,
     )
 
@@ -262,6 +271,24 @@ def test_lsh_candidate_stages_run_once(spark, suite):
     # left are the shingle-fetch verify joins
     mplan = _plan(minhash_lsh_pairs(docs))
     assert mplan.count("Generate") >= 2
+
+    # incremental miners against a stored (parquet) index: the batch's
+    # signatures are checkpointed, so the pair plan has no Python
+    # stage; candidates = bucket-row explode + double-explode fan-out
+    for frame, col, build, mine, kw in [
+        (docs, "doc_id", build_minhash_index,
+         minhash_lsh_pairs_incremental, {}),
+        (emb, "vec_id", build_embedding_index,
+         embedding_near_dup_pairs_incremental, {"threshold": 0.95}),
+    ]:
+        path = str(tmp_path / col)
+        build(frame.filter(F.col(col) % 5 != 0), **kw).write.parquet(path)
+        pairs, _ = mine(
+            frame.filter(F.col(col) % 5 == 0), spark.read.parquet(path), **kw
+        )
+        iplan = _plan(pairs)
+        assert "CartesianProduct" not in iplan and "MapInPandas" not in iplan
+        assert iplan.count("Generate") >= 3
 
 
 def test_lsh_bucket_topk_broadcasts_queries(spark, suite):
