@@ -455,7 +455,7 @@ def compute_confusion_matrix(
     )
     # one conditional-array explode instead of a strong/weak 3-leg
     # union: a union whose legs share the matcher subtree re-executes
-    # the mapInPandas greedy kernel once PER LEG (exchange reuse does
+    # the mapInArrow greedy kernel once PER LEG (exchange reuse does
     # not cover map-side Python stages) — measured 3-4x the matcher
     # cost on the composed pipeline before this restructure
     null_s = F.lit(None).cast("string")

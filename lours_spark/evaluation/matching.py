@@ -14,10 +14,11 @@ common case: ~4 boxes per image, millions of images). Instead we:
 1. ``repartition`` by image_id (hash — groups never straddle
    partitions) and ``sortWithinPartitions`` by the group key, then
 2. ``mapInArrow``: each Arrow record batch covers MANY groups; group
-   boundaries are found with numpy change-detection and each group is
-   sliced directly out of the batch's numpy arrays — per-group cost is
-   a few microseconds of slicing plus the numpy kernel, not a pandas
-   DataFrame round-trip.
+   boundaries are found with numpy change-detection, groups are
+   bucketed by (n_gt, n_pred) shape, and ONE greedy loop per shape
+   runs over confidence ranks with every group of the shape stacked
+   (``_greedy_shape``) — a million 2×2 groups cost two vectorized
+   passes, and a crowded group streams its IoUs in fixed-size blocks.
 
 Arrow batches can split a group, so a carry buffer stitches the tail
 group of each batch onto the next.
@@ -35,7 +36,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,14 +51,18 @@ MATCH_SCHEMA = T.StructType(
     ]
 )
 
-_OUT_COLS = [
-    "image_id",
-    "category_id",
-    "prediction_id",
-    "groundtruth_id",
-    "iou",
-    "confidence",
-]
+def _iou(g: np.ndarray, p: np.ndarray) -> np.ndarray:
+    """IoU of XYWH boxes ``g`` (groundtruth) and ``p`` (prediction),
+    broadcast over their leading axes — the one IoU formula of the
+    matcher, elementwise as in reference ``util.py:75-95``."""
+    gx, gy, gw, gh = (g[..., i] for i in range(4))
+    px, py, pw, ph = (p[..., i] for i in range(4))
+    ix = np.maximum(0.0, np.minimum(gx + gw, px + pw) - np.maximum(gx, px))
+    iy = np.maximum(0.0, np.minimum(gy + gh, py + ph) - np.maximum(gy, py))
+    inter = ix * iy
+    union = gw * gh + pw * ph - inter
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(union > 0, inter / union, 0.0)
 
 
 def iou_matrix(gt: np.ndarray, pred: np.ndarray) -> np.ndarray:
@@ -74,70 +78,7 @@ def iou_matrix(gt: np.ndarray, pred: np.ndarray) -> np.ndarray:
     """
     if len(gt) == 0 or len(pred) == 0:
         return np.zeros((len(gt), len(pred)))
-    gx, gy, gw, gh = (gt[:, i][:, None] for i in range(4))
-    px, py, pw, ph = (pred[:, i][None, :] for i in range(4))
-    ix = np.maximum(0.0, np.minimum(gx + gw, px + pw) - np.maximum(gx, px))
-    iy = np.maximum(0.0, np.minimum(gy + gh, py + ph) - np.maximum(gy, py))
-    inter = ix * iy
-    union = gw * gh + pw * ph - inter
-    with np.errstate(divide="ignore", invalid="ignore"):
-        out = np.where(union > 0, inter / union, 0.0)
-    return out
-
-
-def _iou_row(box: np.ndarray, gt: np.ndarray) -> np.ndarray:
-    """IoU of ONE pred box against all gt rows — the same elementwise
-    arithmetic as :func:`iou_matrix` (identical IEEE results), O(n_gt)
-    memory instead of a row of the full matrix."""
-    gx, gy, gw, gh = gt[:, 0], gt[:, 1], gt[:, 2], gt[:, 3]
-    px, py, pw, ph = box
-    ix = np.maximum(0.0, np.minimum(gx + gw, px + pw) - np.maximum(gx, px))
-    iy = np.maximum(0.0, np.minimum(gy + gh, py + ph) - np.maximum(gy, py))
-    inter = ix * iy
-    union = gw * gh + pw * ph - inter
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return np.where(union > 0, inter / union, 0.0)
-
-
-def greedy_match_streaming(
-    gt_boxes: np.ndarray,
-    pr_boxes: np.ndarray,
-    confidences: np.ndarray,
-    min_iou: float = 0.0,
-) -> list[tuple[int, int, float]]:
-    """:func:`greedy_match` without the O(n_gt × n_pred) matrix: each
-    prediction's IoU column is computed on the fly inside the (already
-    sequential-by-semantics) loop — O(n_gt) live memory, identical
-    matches (elementwise arithmetic matches :func:`iou_matrix` exactly,
-    tie-break order unchanged). The memory-safe path for crowded
-    groups: a 50k × 50k group would need a 20 GB matrix; this needs
-    400 KB."""
-    n_gt, n_pred = len(gt_boxes), len(pr_boxes)
-    if n_gt == 0 or n_pred == 0:
-        return []
-    order = np.lexsort((np.arange(n_pred), -confidences))
-    taken = np.zeros(n_gt, dtype=bool)
-    matches: list[tuple[int, int, float]] = []
-    for p in order:
-        row = _iou_row(pr_boxes[p], gt_boxes)
-        col = np.where(taken, -1.0, row)
-        g = int(np.argmax(col))
-        best = col[g]
-        if best > min_iou:
-            matches.append((g, int(p), float(row[g])))
-            taken[g] = True
-    return matches
-
-
-#: above this many iou cells, the per-group kernel streams per-pred
-#: rows instead of materializing the full matrix. This is the measured
-#: PERFORMANCE crossover, not just a memory guard: past ~4M cells the
-#: matrix form turns allocation-bound (its ~8 full-matrix temporaries
-#: are >250 MB of memory traffic at 4k×4k — 1.1s warm vs 0.46s
-#: streamed, and far worse under memory pressure), while the streamed
-#: form's python-loop overhead only wins below ~2k×2k. Matches are
-#: bit-identical either way (parity test in tests/test_matching.py).
-_MATRIX_CELL_CAP = 4_000_000
+    return _iou(np.asarray(gt)[:, None], np.asarray(pred)[None, :])
 
 
 def greedy_match(
@@ -146,11 +87,12 @@ def greedy_match(
     min_iou: float = 0.0,
 ) -> list[tuple[int, int, float]]:
     """Confidence-descending greedy 1:1 assignment (reference
-    ``util.py:146-185``): each prediction, in confidence order, takes
-    the best still-free groundtruth with IoU > min_iou.
+    ``util.py:146-185``) on ONE group: each prediction, in confidence
+    order, takes the best still-free groundtruth with IoU > min_iou.
 
-    Returns (gt_idx, pred_idx, iou) triples. The inner argmax is
-    vectorized; only the outer (sequential by semantics) loop is Python.
+    Returns (gt_idx, pred_idx, iou) triples. This is the per-group API
+    and the tests' standalone reference; :func:`compute_matches` runs
+    the same rule stacked across groups (``_greedy_shape``).
     """
     n_gt, n_pred = ious.shape
     if n_gt == 0 or n_pred == 0:
@@ -173,147 +115,51 @@ def greedy_match(
     return matches
 
 
-def _match_group_arrays(
-    image_id: int,
-    category_id: int,
-    ids: np.ndarray,
-    boxes: np.ndarray,
-    is_gt: np.ndarray,
-    conf: np.ndarray,
-    out: list,
-    min_iou: float = 0.0,
-) -> None:
-    """Match one group given raw numpy slices; append output tuples."""
-    # rows arrive sorted by (is_groundtruth, id): predictions block
-    # first, then groundtruths, each id-ascending — no per-group sorts
-    split = int(np.searchsorted(is_gt, True))
-    pr_ids, pr_boxes, pr_conf = ids[:split], boxes[:split], conf[:split]
-    gt_ids, gt_boxes = ids[split:], boxes[split:]
-
-    if len(gt_boxes) * len(pr_boxes) > _MATRIX_CELL_CAP:
-        # crowded group: stream per-pred iou rows — O(n_gt) memory,
-        # identical matches (see greedy_match_streaming)
-        matches = greedy_match_streaming(
-            gt_boxes, pr_boxes, pr_conf, min_iou=min_iou
-        )
-    else:
-        ious = iou_matrix(gt_boxes, pr_boxes)
-        matches = greedy_match(ious, pr_conf, min_iou=min_iou)
-    matched_gt = set()
-    matched_pred = set()
-    for g, p, iou in matches:
-        matched_gt.add(g)
-        matched_pred.add(p)
-        out.append(
-            (
-                image_id,
-                category_id,
-                int(pr_ids[p]),
-                int(gt_ids[g]),
-                iou,
-                float(pr_conf[p]),
-            )
-        )
-    for g in range(len(gt_ids)):
-        if g not in matched_gt:  # false negative
-            out.append((image_id, category_id, None, int(gt_ids[g]), None, None))
-    for p in range(len(pr_ids)):
-        if p not in matched_pred:  # false positive
-            out.append(
-                (
-                    image_id,
-                    category_id,
-                    int(pr_ids[p]),
-                    None,
-                    None,
-                    float(pr_conf[p]),
-                )
-            )
+#: IoU cells per block of confidence ranks in :func:`_greedy_shape`:
+#: one shape's stacked groups get their IoUs ``(G, b, n_gt)`` for b
+#: ranks at a time, so kernel memory is O(rows + this) at any group size
+_BLOCK_CELLS = 2**18
 
 
-def _bulk_greedy_shape(
-    h_img: np.ndarray,
-    h_cat: np.ndarray,
-    ids: np.ndarray,
-    boxes: np.ndarray,
-    conf: np.ndarray,
+def _greedy_shape(
     ss: np.ndarray,
     n_gt: int,
     n_pr: int,
-    emit,
+    boxes: np.ndarray,
+    conf: np.ndarray,
+    partner: np.ndarray,
     min_iou: float,
 ) -> None:
-    """Greedy-match every segment of one (n_gt, n_pred) shape at once.
+    """Greedy-match every group of one (n_gt, n_pred) shape at once.
 
-    Segments are laid out predictions-first then groundtruths, each
-    id-ascending (the partition sort key), so row indices are affine in
-    the segment start. The confidence-descending greedy loop runs over
-    RANKS: at rank r every group's r-th-most-confident prediction takes
-    its best still-free groundtruth — semantically identical to
-    :func:`greedy_match` per group (argmax tie → lowest gt index →
-    lowest gt id; confidence tie → stable sort keeps lower pred id)."""
+    ``ss`` are the groups' first rows; a group is its predictions then
+    its groundtruths, each id-ascending (the partition sort key). The
+    sequential-by-semantics loop runs over confidence RANKS, not groups:
+    at rank r every group's r-th-most-confident prediction takes its
+    best still-free groundtruth. Ties match :func:`greedy_match`: the
+    stable sort keeps the lower pred id first, argmax the lowest gt.
+    Writes each matched row's ``partner`` row index."""
     G = len(ss)
     rng = np.arange(G)
-    pr_idx = ss[:, None] + np.arange(n_pr)[None, :]
-    gt_idx = ss[:, None] + n_pr + np.arange(n_gt)[None, :]
-    gb = boxes[gt_idx]  # (G, n_gt, 4)
-    pb = boxes[pr_idx]  # (G, n_pr, 4)
-    pc = conf[pr_idx]  # (G, n_pr)
-
-    gx, gy, gw, gh = (gb[:, :, None, i] for i in range(4))
-    px, py, pw, ph = (pb[:, None, :, i] for i in range(4))
-    ix = np.maximum(0.0, np.minimum(gx + gw, px + pw) - np.maximum(gx, px))
-    iy = np.maximum(0.0, np.minimum(gy + gh, py + ph) - np.maximum(gy, py))
-    inter = ix * iy
-    union = gw * gh + pw * ph - inter
-    with np.errstate(divide="ignore", invalid="ignore"):
-        ious = np.where(union > 0, inter / union, 0.0)  # (G, n_gt, n_pr)
-
-    order = np.argsort(-pc, axis=1, kind="stable")  # (G, n_pr)
-    masked = ious.copy()
-    matched_gt = np.zeros((G, n_gt), dtype=bool)
-    matched_pr = np.zeros((G, n_pr), dtype=bool)
-    pair_gt = np.zeros((G, n_pr), dtype=np.int64)  # gt slot taken at rank r
-    for r in range(n_pr):
-        p = order[:, r]  # (G,)
-        col = masked[rng, :, p]  # (G, n_gt)
-        g = col.argmax(axis=1)
-        ok = col[rng, g] > min_iou
-        matched_gt[rng[ok], g[ok]] = True
-        matched_pr[rng[ok], p[ok]] = True
-        pair_gt[rng, p] = g
-        masked[rng[ok], g[ok], :] = -1.0
-
-    # matched pairs
-    mg, mp = np.nonzero(matched_pr)
-    if len(mg):
-        g_slot = pair_gt[mg, mp]
-        emit(
-            h_img[ss[mg]], h_cat[ss[mg]],
-            ids[pr_idx[mg, mp]].astype(float),
-            ids[gt_idx[mg, g_slot]].astype(float),
-            ious[mg, g_slot, mp], pc[mg, mp],
-        )
-    # unmatched groundtruths → FN rows
-    fg, fgs = np.nonzero(~matched_gt)
-    if len(fg):
-        k = len(fg)
-        nan = np.nan
-        emit(
-            h_img[ss[fg]], h_cat[ss[fg]],
-            np.full(k, nan), ids[gt_idx[fg, fgs]].astype(float),
-            np.full(k, nan), np.full(k, nan),
-        )
-    # unmatched predictions → FP rows
-    fp, fps = np.nonzero(~matched_pr)
-    if len(fp):
-        k = len(fp)
-        nan = np.nan
-        emit(
-            h_img[ss[fp]], h_cat[ss[fp]],
-            ids[pr_idx[fp, fps]].astype(float), np.full(k, nan),
-            np.full(k, nan), conf[pr_idx[fp, fps]],
-        )
+    pr_rows = ss[:, None] + np.argsort(
+        -conf[ss[:, None] + np.arange(n_pr)], axis=1, kind="stable"
+    )  # (G, n_pr) in confidence order
+    gt_rows = ss[:, None] + n_pr + np.arange(n_gt)  # (G, n_gt)
+    gt_boxes = boxes[gt_rows][:, None]  # (G, 1, n_gt, 4)
+    taken = np.zeros((G, n_gt), dtype=bool)
+    best = np.empty((G, n_pr), dtype=np.int64)  # gt slot chosen at rank r
+    ok = np.empty((G, n_pr), dtype=bool)  # ... and accepted
+    step = max(1, _BLOCK_CELLS // (G * n_gt))
+    for r0 in range(0, n_pr, step):
+        ious = _iou(gt_boxes, boxes[pr_rows[:, r0:r0 + step]][:, :, None])
+        for r in range(r0, min(r0 + step, n_pr)):  # ious: (G, b, n_gt)
+            col = np.where(taken, -1.0, ious[:, r - r0])
+            g = col.argmax(axis=1)
+            best[:, r], ok[:, r] = g, col[rng, g] > min_iou
+            taken[rng[ok[:, r]], g[ok[:, r]]] = True
+    grp, r = np.nonzero(ok)
+    p, g = pr_rows[grp, r], gt_rows[grp, best[grp, r]]
+    partner[p], partner[g] = g, p
 
 
 _IN_COLS = [
@@ -331,311 +177,77 @@ _IN_COLS = [
 _NumpyBatch = dict  # str -> np.ndarray, all the same length
 
 
-def _match_batches(
-    batches: Iterator[_NumpyBatch], min_iou: float = 0.0
-) -> Iterator[tuple[dict, list]]:
-    """Partition kernel: stream column dicts of numpy arrays, stitch
-    the carry group across batch boundaries, slice groups via numpy
-    change-detection. Yields (columnar-arrays, row-tuples) pairs —
-    the Arrow/pandas wrapper owns the final output format."""
-    carry: _NumpyBatch | None = None
-
-    def _len(b: _NumpyBatch) -> int:
-        return len(b["image_id"])
-
-    def _slice(b: _NumpyBatch, lo: int, hi: int) -> _NumpyBatch:
-        return {k: v[lo:hi] for k, v in b.items()}
-
-    def process(pdf: _NumpyBatch, is_last: bool) -> tuple[tuple[dict, list], _NumpyBatch | None]:
-        img = pdf["image_id"]
-        cat = pdf["category_id"]
-        if not is_last and _len(pdf):
-            # hold back the trailing (possibly incomplete) group: find
-            # the first row index of the batch's last (image, category)
-            in_last = (img == img[-1]) & (cat == cat[-1])
-            tail_start = (
-                int(len(img) - in_last[::-1].argmin()) if not in_last.all() else 0
-            )
-            head, tail = _slice(pdf, 0, tail_start), _slice(pdf, tail_start, _len(pdf))
-        else:
-            head, tail = pdf, None
-        out: list = []
-        cols: dict[str, list[np.ndarray]] = {c: [] for c in _OUT_COLS}
-        if _len(head):
-            h_img = head["image_id"]
-            h_cat = head["category_id"]
-            ids = head["id"]
-            boxes = np.column_stack(
-                [
-                    head["box_x_min"],
-                    head["box_y_min"],
-                    head["box_width"],
-                    head["box_height"],
-                ]
-            ).astype(float)
-            is_gt = head["is_groundtruth"].astype(bool)
-            conf = head["confidence"].astype(float)
-            change = np.nonzero((h_img[1:] != h_img[:-1]) | (h_cat[1:] != h_cat[:-1]))[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [_len(head)]))
-
-            # bulk paths: per-group python costs ~300µs in numpy-call
-            # overhead, so the dominant tiny shapes are vectorized
-            # across ALL groups of the batch at once
-            sizes = ends - starts
-            n_gt_per = np.add.reduceat(is_gt.astype(np.int64), starts)
-            n_pr_per = sizes - n_gt_per
-            nan = np.nan
-
-            def emit(img, cat, pred_id, gt_id, iou, cf):
-                cols["image_id"].append(img)
-                cols["category_id"].append(cat)
-                cols["prediction_id"].append(pred_id)
-                cols["groundtruth_id"].append(gt_id)
-                cols["iou"].append(iou)
-                cols["confidence"].append(cf)
-
-            # groups with no predictions → every row is a FN
-            only_gt = n_pr_per == 0
-            if only_gt.any():
-                rows = np.repeat(only_gt, sizes)
-                k = int(rows.sum())
-                emit(
-                    h_img[rows], h_cat[rows],
-                    np.full(k, nan), ids[rows].astype(float),
-                    np.full(k, nan), np.full(k, nan),
-                )
-            # groups with no groundtruth → every row is a FP
-            only_pr = n_gt_per == 0
-            if only_pr.any():
-                rows = np.repeat(only_pr, sizes)
-                k = int(rows.sum())
-                emit(
-                    h_img[rows], h_cat[rows],
-                    ids[rows].astype(float), np.full(k, nan),
-                    np.full(k, nan), conf[rows],
-                )
-            # exactly one gt + one pred → closed-form match
-            simple = (sizes == 2) & (n_gt_per == 1)
-            if simple.any():
-                s = starts[simple]
-                first_gt = is_gt[s]
-                g_idx = np.where(first_gt, s, s + 1)
-                p_idx = np.where(first_gt, s + 1, s)
-                gb, pb = boxes[g_idx], boxes[p_idx]
-                ix = np.maximum(
-                    0.0,
-                    np.minimum(gb[:, 0] + gb[:, 2], pb[:, 0] + pb[:, 2])
-                    - np.maximum(gb[:, 0], pb[:, 0]),
-                )
-                iy = np.maximum(
-                    0.0,
-                    np.minimum(gb[:, 1] + gb[:, 3], pb[:, 1] + pb[:, 3])
-                    - np.maximum(gb[:, 1], pb[:, 1]),
-                )
-                inter = ix * iy
-                union = gb[:, 2] * gb[:, 3] + pb[:, 2] * pb[:, 3] - inter
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    iou = np.where(union > 0, inter / union, 0.0)
-                matched = iou > min_iou
-                if matched.any():
-                    emit(
-                        h_img[s][matched], h_cat[s][matched],
-                        ids[p_idx][matched].astype(float),
-                        ids[g_idx][matched].astype(float),
-                        iou[matched], conf[p_idx][matched],
-                    )
-                if (~matched).any():
-                    m = ~matched
-                    k = int(m.sum())
-                    emit(  # unmatched gt (FN)
-                        h_img[s][m], h_cat[s][m],
-                        np.full(k, nan), ids[g_idx][m].astype(float),
-                        np.full(k, nan), np.full(k, nan),
-                    )
-                    emit(  # unmatched pred (FP)
-                        h_img[s][m], h_cat[s][m],
-                        ids[p_idx][m].astype(float), np.full(k, nan),
-                        np.full(k, nan), conf[p_idx][m],
-                    )
-            # everything else: bucket segments by (n_gt, n_pred) shape
-            # and run the greedy loop STACKED across all groups of a
-            # shape — the sequential-by-semantics loop is over
-            # confidence ranks (≤ n_pred iterations), not over groups,
-            # so a million 2×2 groups cost 2 vectorized passes instead
-            # of a million Python calls. Rare big shapes (crowded
-            # images) fall back to the per-group kernel.
-            general = ~(only_gt | only_pr | simple)
-            if general.any():
-                g_starts = starts[general]
-                g_ends = ends[general]
-                g_ngt = n_gt_per[general]
-                g_npr = n_pr_per[general]
-                # the packed shape key mis-decodes at n_pr >= 100000
-                # (e.g. (g, 100000) packs like (g+1, 0)) — route such
-                # monster groups straight to the per-group kernel
-                huge = g_npr >= 100000
-                if huge.any():
-                    for s, e in zip(g_starts[huge], g_ends[huge]):
-                        _match_group_arrays(
-                            int(h_img[s]), int(h_cat[s]),
-                            ids[s:e], boxes[s:e], is_gt[s:e],
-                            conf[s:e], out, min_iou=min_iou,
-                        )
-                    g_starts = g_starts[~huge]
-                    g_ends = g_ends[~huge]
-                    g_ngt = g_ngt[~huge]
-                    g_npr = g_npr[~huge]
-                shape_key = g_ngt * 100000 + g_npr
-                for key in np.unique(shape_key):
-                    sel = shape_key == key
-                    n_gt_s = int(key // 100000)
-                    n_pr_s = int(key % 100000)
-                    ss = g_starts[sel]
-                    if len(ss) < 4 or n_gt_s * n_pr_s > 256:
-                        for s, e in zip(ss, g_ends[sel]):
-                            _match_group_arrays(
-                                int(h_img[s]), int(h_cat[s]),
-                                ids[s:e], boxes[s:e], is_gt[s:e],
-                                conf[s:e], out, min_iou=min_iou,
-                            )
-                        continue
-                    _bulk_greedy_shape(
-                        h_img, h_cat, ids, boxes, conf,
-                        ss, n_gt_s, n_pr_s, emit, min_iou,
-                    )
-
-        arr = (
-            {c: np.concatenate(cols[c]) for c in _OUT_COLS}
-            if cols["image_id"]
-            else None
-        )
-        return (arr, out), tail
-
-    # one-batch lookahead: is_last is known without materializing the
-    # whole partition's batches up front
-    it = iter(batches)
-    try:
-        cur = next(it)
-    except StopIteration:
-        return
-    while True:
-        try:
-            nxt = next(it)
-            is_last = False
-        except StopIteration:
-            nxt = None
-            is_last = True
-        if carry is not None:
-            cur = {k: np.concatenate([carry[k], cur[k]]) for k in cur}
-            carry = None
-        result, carry = process(cur, is_last=is_last)
-        if result[0] is not None or result[1]:
-            yield result
-        if is_last:
-            break
-        cur = nxt
-    if carry is not None and _len(carry):
-        result, _ = process(carry, is_last=True)
-        if result[0] is not None or result[1]:
-            yield result
-
-
-def _none_if_nan(v):
-    """nan == SQL NULL in the kernel's scratch values (tuple rows may
-    carry either None or nan for a missing iou/confidence)."""
-    if v is None:
-        return None
-    f = float(v)
-    return None if f != f else f
-
-
-def _result_to_arrow(arr: dict | None, out: list):
-    """Assemble one kernel result into pyarrow RecordBatches matching
-    MATCH_SCHEMA (nan in the float scratch arrays == SQL NULL).
-
-    Returns a LIST of batches: the bulk-path columnar arrays and the
-    per-group-kernel tuple rows become separate batches so the tuple
-    rows' ids stay exact Python ints end-to-end — never folded through
-    float64 (which would silently round ids >= 2**53). The bulk path's
-    nullable prediction/groundtruth ids still ride a float64 scratch
-    array, bounding THOSE ids to exact-at-2**53; asserted below."""
+def _match_rows(b: _NumpyBatch, starts: np.ndarray, min_iou: float):
+    """Match whole groups (rows sorted like the partition, group first
+    rows ``starts``) into one MATCH_SCHEMA RecordBatch: a TP or FP row
+    per prediction, a FN row per unmatched groundtruth. Ids stay int64
+    with validity masks (exact at any magnitude); NaN floats are NULL."""
     import pyarrow as pa
 
-    def nullable_long(a: np.ndarray) -> "pa.Array":
-        mask = np.isnan(a)
-        # float64 scratch is exact only up to 2**53 — fail loud rather
-        # than emit a rounded id (bulk path only; tuple rows are exact)
-        if a.size and np.nanmax(np.abs(a), initial=0.0) >= 2.0**53:
-            raise ValueError(
-                "annotation id magnitude >= 2**53 is not representable in"
-                " the match kernel's float64 scratch columns"
-            )
-        return pa.array(
-            np.where(mask, 0, a).astype("int64"), type=pa.int64(), mask=mask
+    ids, is_gt = b["id"], b["is_groundtruth"].astype(bool)
+    n = len(ids)
+    boxes = np.column_stack(
+        [b[c] for c in ("box_x_min", "box_y_min", "box_width", "box_height")]
+    ).astype(float)
+    conf = b["confidence"].astype(float)
+    n_gt = np.add.reduceat(is_gt.astype(np.int64), starts)
+    n_pr = np.diff(starts, append=n) - n_gt
+    partner = np.full(n, -1, dtype=np.int64)
+    # groups with both sides, bucketed by exact (n_gt, n_pred) shape;
+    # gt-only and pred-only groups keep partner -1 (all FN / all FP)
+    both = (n_gt > 0) & (n_pr > 0)
+    ss, sg, sp = starts[both], n_gt[both], n_pr[both]
+    order = np.lexsort((sp, sg))
+    ss, sg, sp = ss[order], sg[order], sp[order]
+    cut = np.flatnonzero(
+        (np.diff(sg, prepend=-1) != 0) | (np.diff(sp, prepend=-1) != 0)
+    )
+    for lo, hi in zip(cut, np.append(cut[1:], len(ss))):
+        _greedy_shape(
+            ss[lo:hi], int(sg[lo]), int(sp[lo]), boxes, conf, partner, min_iou
         )
 
-    def nullable_double(a: np.ndarray) -> "pa.Array":
-        return pa.array(a, type=pa.float64(), mask=np.isnan(a))
+    keep = ~is_gt | (partner < 0)  # matched gt rows ride their TP row
+    is_pr, part, rid = ~is_gt[keep], partner[keep], ids[keep]
+    tp = part >= 0
+    gt_id = np.where(is_pr, ids[part], rid)
+    cf = np.where(is_pr, conf[keep], np.nan)
+    iou = np.full(len(rid), np.nan)
+    iou[tp] = _iou(boxes[part[tp]], boxes[keep][tp])
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(b["image_id"][keep].astype(np.int64)),
+            pa.array(b["category_id"][keep].astype(np.int32)),
+            pa.array(rid.astype(np.int64), mask=~is_pr),
+            pa.array(gt_id.astype(np.int64), mask=is_pr & ~tp),
+            pa.array(iou, mask=np.isnan(iou)),
+            pa.array(cf, mask=np.isnan(cf)),
+        ],
+        names=MATCH_SCHEMA.names,
+    )
 
-    batches = []
-    if arr is not None:
-        batches.append(
-            pa.RecordBatch.from_arrays(
-                [
-                    pa.array(arr["image_id"].astype("int64"), type=pa.int64()),
-                    pa.array(arr["category_id"].astype("int32"), type=pa.int32()),
-                    nullable_long(arr["prediction_id"]),
-                    nullable_long(arr["groundtruth_id"]),
-                    nullable_double(arr["iou"]),
-                    nullable_double(arr["confidence"]),
-                ],
-                names=_OUT_COLS,
-            )
+
+def _match_batches(batches: Iterator[_NumpyBatch], min_iou: float = 0.0):
+    """Partition kernel: numpy column dicts in (sorted by group key),
+    MATCH_SCHEMA RecordBatches out. Groups are found with numpy
+    change-detection; a batch's last group may continue in the next
+    batch, so it is carried over and matched with that batch."""
+    carry: _NumpyBatch | None = None
+    for cur in batches:
+        if carry is not None:
+            cur = {k: np.concatenate([carry[k], cur[k]]) for k in cur}
+        img, cat = cur["image_id"], cur["category_id"]
+        if not len(img):
+            continue
+        starts = np.flatnonzero(
+            np.r_[True, (img[1:] != img[:-1]) | (cat[1:] != cat[:-1])]
         )
-    if out:
-        # per-group-kernel rows (python tuples, None == NULL): ids go
-        # straight from int to int64 arrow columns, exact at any magnitude
-        cols = list(zip(*out))
-        batches.append(
-            pa.RecordBatch.from_arrays(
-                [
-                    pa.array([int(v) for v in cols[0]], type=pa.int64()),
-                    pa.array([int(v) for v in cols[1]], type=pa.int32()),
-                    pa.array(
-                        [None if v is None else int(v) for v in cols[2]],
-                        type=pa.int64(),
-                    ),
-                    pa.array(
-                        [None if v is None else int(v) for v in cols[3]],
-                        type=pa.int64(),
-                    ),
-                    pa.array(
-                        [_none_if_nan(v) for v in cols[4]], type=pa.float64()
-                    ),
-                    pa.array(
-                        [_none_if_nan(v) for v in cols[5]], type=pa.float64()
-                    ),
-                ],
-                names=_OUT_COLS,
-            )
-        )
-    return batches
-
-
-def _match_batches_arrow(batches, min_iou: float = 0.0):
-    """mapInArrow kernel: pyarrow RecordBatch in/out, numpy in between —
-    no pandas materialization on either side of the hot loop."""
-    def to_numpy(batch) -> _NumpyBatch:
-        return {
-            name: batch.column(i).to_numpy(zero_copy_only=False)
-            for i, name in enumerate(batch.schema.names)
-        }
-
-    for arr, out in _match_batches(
-        (to_numpy(b) for b in batches), min_iou=min_iou
-    ):
-        yield from _result_to_arrow(arr, out)
+        t = starts[-1]
+        carry = {k: v[t:] for k, v in cur.items()}
+        if t:
+            yield _match_rows({k: v[:t] for k, v in cur.items()}, starts[:-1], min_iou)
+    if carry is not None:
+        yield _match_rows(carry, np.zeros(1, dtype=np.int64), min_iou)
 
 
 def compute_matches(
@@ -657,20 +269,11 @@ def compute_matches(
     once per threshold; the reference's single-match-then-threshold
     protocol = calling once at 0 and filtering ``iou`` downstream.
 
-    Cost shape (measured at 10x/11M rows, local[32]): the Arrow
-    worker round trip dominates — a NO-OP passthrough of the arranged
-    frame costs ~5.4-5.9s (insensitive to
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` from 10k to 1M)
-    while the greedy kernel itself adds only ~1s on top. A JVM-side
-    split that resolved closed-form groups (≤1 gt or ≤1 pred) with
-    window/join expressions and shipped only ambiguous groups to the
-    kernel was implemented, equivalence-tested, and MEASURED SLOWER in
-    both regimes — 4x slower on the bench's ambiguous-heavy boxes and
-    ~1.8x slower even on fully-degenerate 1x1 groups, because its own
-    machinery (group-count window, pair join, three rank windows ≈
-    five full sorts) costs more than the transfer it saves — and was
-    reverted (see git history). The single-shuffle + Arrow-kernel
-    shape below is the measured optimum on this surface."""
+    Cost shape (measured at 10x/11M rows, local[32]): the Arrow worker
+    round trip dominates — a no-op passthrough costs ~5.4-5.9s, the
+    greedy kernel ~1s on top — and a JVM-side split that resolved
+    closed-form groups with window/join expressions was measured
+    slower (its sorts cost more than the transfer it saves)."""
     box_cols = ["box_x_min", "box_y_min", "box_width", "box_height"]
     gt = groundtruth.select(
         "id", "image_id", "category_id", *box_cols,
@@ -704,6 +307,13 @@ def compute_matches(
     thr = float(min_iou)
 
     def kernel(batches):
-        return _match_batches_arrow(batches, min_iou=thr)
+        return _match_batches(
+            (
+                {name: col.to_numpy(zero_copy_only=False)
+                 for name, col in zip(b.schema.names, b.columns)}
+                for b in batches
+            ),
+            min_iou=thr,
+        )
 
     return arranged.mapInArrow(kernel, MATCH_SCHEMA)

@@ -1383,8 +1383,9 @@ def _embedding_near_dup_ivf(
     :func:`embedding_near_duplicates`). K-means lists come from MLlib
     (distributed, sampling-based init); multi-probe assignment is one
     mapInPandas pass against the broadcast (k × dim) centroid matrix —
-    the only shuffles are the centroid-bucket self-join on (id,
-    centroid) rows and the verify join back to vectors."""
+    the only shuffles are the centroid-bucket groupBy on (id, centroid)
+    rows (:func:`_bucket_pairs`, so the probe runs once) and the verify
+    join back to vectors."""
     import numpy as np
     import pandas as pd
     from pyspark.ml.clustering import KMeans
@@ -1430,14 +1431,7 @@ def _embedding_near_dup_ivf(
             )
 
     assigned = df.select(id_col, vec_col).mapInPandas(probe, "__id long, __c int")
-    a = assigned.select(F.col("__id").alias("id_a"), "__c")
-    b = assigned.select(F.col("__id").alias("id_b"), "__c")
-    candidates = (
-        a.join(b, "__c")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()  # pairs may share several probed centroids
-    )
+    candidates, _ = _bucket_pairs(assigned, ("__c",), None, "skip")
     return _verify_pairs(
         candidates, _vec_payload(df, id_col, vec_col),
         V.cosine_similarity_arrow(), threshold, "cosine",

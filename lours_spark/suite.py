@@ -1132,6 +1132,7 @@ def q_embedding_incremental(spark, sf_dir):
     result equals the full run restricted to new-sided pairs; the
     oracle is the exact all-pairs join so restricted (LSH recall =
     exact at this corpus, as for embedding_near_dup)."""
+    from lours_spark.operators._materialize import materialize
     from lours_spark.operators.dedup import (
         build_embedding_index,
         embedding_near_dup_pairs_incremental,
@@ -1159,11 +1160,12 @@ def q_embedding_incremental(spark, sf_dir):
     )
     old = planted.filter(F.col("vec_id") % 5 != 0)
     new = planted.filter(F.col("vec_id") % 5 == 0)
-    # cache the inline-built index: a PRODUCTION index is a parquet
-    # scan (cheap to re-reference), but this facet builds it in-plan
-    # and the miner references the index side three times (bucket rows
-    # + both verify legs) — uncached, the BLAS pass would run 3x
-    index = build_embedding_index(old, threshold=0.95).cache()
+    # materialize the inline-built index: a PRODUCTION index is a
+    # parquet scan (cheap to re-reference), but this facet builds it
+    # in-plan and the miner references the index side three times
+    # (bucket rows + both verify legs) — unmaterialized, the BLAS pass
+    # would run 3x
+    index = materialize(build_embedding_index(old, threshold=0.95), eager=True)
     pairs, _ = embedding_near_dup_pairs_incremental(
         new, index, threshold=0.95
     )
@@ -1748,7 +1750,7 @@ def _dd_matches_cte(pred_filter: str = "") -> str:
     matcher-facet boxes, VALUE-EXACTLY: the greedy loop is a recursive
     CTE over per-group prediction rank carrying the taken-groundtruth
     id list. Per prediction (confidence DESC, id ASC — the kernel's
-    lexsort order) the first still-free entry of its (iou DESC, gt id
+    stable-sort order) the first still-free entry of its (iou DESC, gt id
     ASC)-ordered candidate list is taken when iou > 0 — exactly
     numpy's masked argmax with first-index tie-break, and the IoU
     arithmetic below is the same IEEE expression tree as
@@ -1961,7 +1963,7 @@ JOIN grid g ON g.category_id = r.category_id
 
 
 def q_greedy_matching(spark, sf_dir):
-    """Greedy bipartite IoU matching via the mapInPandas kernel: gt =
+    """Greedy bipartite IoU matching via the mapInArrow kernel: gt =
     synthetic boxes from lineitem (deduplicated to unique ids, see
     ``_matcher_ann``), predictions = the same boxes jittered, so
     matches are plentiful and deterministic. VALUE-EXACT oracle: the
@@ -1982,14 +1984,12 @@ def q_matcher_skew(spark, sf_dir):
     """Skewed-matcher stress facet: ~0.7% of all boxes (line 3 of
     every 20th order) rerouted into ONE monster (image, category)
     group among the ~15k tiny groups — at sf0.1 that is a
-    ~4000 gt × 4000 pred group, far over the kernel's
-    256-product bulk cap, so the per-group numpy fallback
-    (matching.py per-group kernel) runs inside one extremely skewed
-    shuffle partition while the bulk shape-stacked path handles the
-    tiny groups around it. Output: per-status counts split
-    monster/rest (small, stable). Kernel-vs-standalone identity for
-    the monster group is asserted in
-    tests/test_matching.py::test_skewed_group_routes_to_per_group_kernel
+    ~4000 gt × 4000 pred group, which the kernel's one greedy loop
+    runs as a shape of its own, its IoUs computed in blocks of
+    confidence ranks, inside one extremely skewed shuffle partition.
+    Output: per-status counts split monster/rest (small, stable).
+    Kernel-vs-standalone identity for a monster group is asserted in
+    tests/test_matching.py::test_skewed_group_identical_to_greedy_match
     and ::test_compute_matches_skewed_identical_to_standalone."""
     from lours_spark.evaluation.matching import compute_matches
     from lours_spark.functions.bbox import import_bbox

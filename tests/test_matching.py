@@ -111,21 +111,30 @@ def test_greedy_match_against_reference_random():
 
 
 def test_compute_matches_preserves_huge_ids(spark):
-    """Annotation ids >= 2**53 survive the per-group kernel exactly:
-    its tuple rows go int -> int64 arrow columns without a float64
-    detour (ADVICE r3: the old path rounded such ids silently). A
-    20x20 group (product > 256) routes to the per-group kernel."""
+    """Annotation ids >= 2**53 survive the kernel exactly in every group
+    shape — a 20x20 group, a 1x1 match, a groundtruth-only (FN) group, a
+    prediction-only (FP) group and four stacked 2x2 groups: ids go
+    int64 -> int64 arrow columns with validity masks, never through a
+    float64 column (which would round them)."""
     base = 2**53
-    n = 20
-    gt_rows = [
-        (base + 2 * i + 1, 5, 0, float(20 * i), 0.0, 10.0, 10.0)
-        for i in range(n)
-    ]
-    pred_rows = [
-        (base + 10_000 + 2 * i + 1, 5, 0, float(20 * i) + 1.0, 0.0, 10.0,
-         10.0, 0.5 + i / 100)
-        for i in range(n)
-    ]
+    gt_rows, pred_rows = [], []
+
+    def add(img, n_gt, n_pr, k):
+        # odd offsets are NOT float64-representable around 2**53
+        for i in range(n_gt):
+            gt_rows.append((base + 2 * (1000 * k + i) + 1, img, 0,
+                            float(20 * i), 0.0, 10.0, 10.0))
+        for i in range(n_pr):
+            pred_rows.append((base + 2 * (1000 * k + 500 + i) + 1, img, 0,
+                              float(20 * i) + 1.0, 0.0, 10.0, 10.0,
+                              0.5 + i / 100))
+
+    add(5, 20, 20, 0)  # big group
+    add(6, 1, 1, 1)  # 1x1
+    add(7, 3, 0, 2)  # FN-only
+    add(8, 0, 3, 3)  # FP-only
+    for k in range(4):  # one stacked 2x2 shape
+        add(9 + k, 2, 2, 4 + k)
     gt = spark.createDataFrame(
         gt_rows,
         "id long, image_id long, category_id int, box_x_min double, "
@@ -140,29 +149,39 @@ def test_compute_matches_preserves_huge_ids(spark):
     rows = compute_matches(gt, pred).collect()
     got_pred = {r["prediction_id"] for r in rows if r["prediction_id"] is not None}
     got_gt = {r["groundtruth_id"] for r in rows if r["groundtruth_id"] is not None}
-    # odd offsets are NOT float64-representable around 2**53 — exact
-    # equality proves ids never rode a float column
     assert got_pred == {r[0] for r in pred_rows}
     assert got_gt == {r[0] for r in gt_rows}
     matched = [r for r in rows if r["prediction_id"] and r["groundtruth_id"]]
-    assert len(matched) == n
+    assert len(matched) == 20 + 1 + 4 * 2
+    assert {r["groundtruth_id"] - base for r in rows
+            if r["image_id"] == 7} == {2 * (2000 + i) + 1 for i in range(3)}
+    assert {r["prediction_id"] - base for r in rows
+            if r["image_id"] == 8} == {2 * (3500 + i) + 1 for i in range(3)}
 
 
-def _batch_from_groups(groups):
+def _batch_from_groups(groups, lattice=False):
     """Build a kernel input batch dict sorted like compute_matches
-    arranges partitions: (image_id, category_id, is_groundtruth, id)."""
+    arranges partitions: (image_id, category_id, is_groundtruth, id).
+    ``lattice`` draws integer boxes and one-decimal confidences, so IoUs
+    and confidences tie often."""
+    def box(rng):
+        if lattice:
+            return (*rng.integers(0, 6, 2).astype(float),
+                    *(1.0 + rng.integers(0, 5, 2)))
+        return (rng.uniform(0, 80), rng.uniform(0, 80),
+                rng.uniform(5, 20), rng.uniform(5, 20))
+
+    def confidence(rng):
+        return float(rng.integers(1, 4)) / 10 if lattice else rng.uniform(0.1, 1.0)
+
     rows = []
     for (img, cat), (n_gt, n_pr, rng) in groups.items():
         for i in range(n_pr):  # predictions block first (is_gt False)
             rows.append((img, cat, 1_000_000 + img * 1000 + i, False,
-                         rng.uniform(0, 80), rng.uniform(0, 80),
-                         rng.uniform(5, 20), rng.uniform(5, 20),
-                         rng.uniform(0.1, 1.0)))
+                         *box(rng), confidence(rng)))
         for i in range(n_gt):
             rows.append((img, cat, 2_000_000 + img * 1000 + i, True,
-                         rng.uniform(0, 80), rng.uniform(0, 80),
-                         rng.uniform(5, 20), rng.uniform(5, 20),
-                         np.nan))
+                         *box(rng), np.nan))
     rows.sort(key=lambda r: (r[0], r[1], r[3], r[2]))
     cols = list(zip(*rows))
     return {
@@ -178,58 +197,89 @@ def _batch_from_groups(groups):
     }
 
 
-def test_skewed_group_routes_to_per_group_kernel(monkeypatch):
-    """A big-product group (30x30 > 256 cap) must bypass the bulk
-    shape-stacked path and run the per-group kernel, with output
-    identical to greedy_match run standalone on that group."""
+def _kernel_groups(batches, min_iou=0.0):
+    """Run the partition kernel; per (image, category): (TP pairs
+    {(pred_id, gt_id): iou}, FN gt ids, FP pred ids, row count)."""
     import lours_spark.evaluation.matching as M
 
+    out = {}
+    for b in M._match_batches(iter(batches), min_iou=min_iou):
+        for r in b.to_pylist():
+            tp, fn, fp, n = out.get((r["image_id"], r["category_id"]),
+                                    ({}, set(), set(), 0))
+            p, g = r["prediction_id"], r["groundtruth_id"]
+            if p is not None and g is not None:
+                tp[(p, g)] = r["iou"]
+            elif g is not None:
+                fn.add(g)
+            else:
+                fp.add(p)
+            out[(r["image_id"], r["category_id"])] = (tp, fn, fp, n + 1)
+    return out
+
+
+def _group_arrays(batch, img, cat):
+    sel = (batch["image_id"] == img) & (batch["category_id"] == cat)
+    is_gt = batch["is_groundtruth"][sel]
+    boxes = np.column_stack([batch[c][sel] for c in
+                             ("box_x_min", "box_y_min", "box_width", "box_height")])
+    ids, conf = batch["id"][sel], batch["confidence"][sel]
+    return ids[is_gt], boxes[is_gt], ids[~is_gt], boxes[~is_gt], conf[~is_gt]
+
+
+def _split_batch(batch, cuts):
+    bounds = [0, *cuts, len(batch["id"])]
+    return [{k: v[lo:hi] for k, v in batch.items()}
+            for lo, hi in zip(bounds[:-1], bounds[1:])]
+
+
+def test_kernel_matches_reference_random(monkeypatch):
+    """Many groups of random shapes (0-8 x 0-8) with tied confidences
+    and lattice-tied IoUs, split across batches so groups straddle
+    batch boundaries, through the partition kernel with a tiny block
+    budget (each shape's stack spans several rank blocks): every group
+    equals the straight-line reference, iou values bit-for-bit, and
+    every prediction and unmatched groundtruth gets exactly one row."""
+    import lours_spark.evaluation.matching as M
+
+    monkeypatch.setattr(M, "_BLOCK_CELLS", 8)
+    rng = np.random.default_rng(31)
+    groups = {(img, cat): (int(rng.integers(0, 9)), int(rng.integers(0, 9)), rng)
+              for img in range(150) for cat in range(2)}
+    batch = _batch_from_groups(groups, lattice=True)
+    cuts = sorted(rng.integers(0, len(batch["id"]), 4).tolist())
+    for min_iou in (0.0, 0.5):
+        got = _kernel_groups(_split_batch(batch, cuts), min_iou)
+        for (img, cat), (n_gt, n_pr, _) in groups.items():
+            if n_gt + n_pr == 0:
+                assert (img, cat) not in got
+                continue
+            gt_ids, gt_boxes, pr_ids, pr_boxes, conf = _group_arrays(batch, img, cat)
+            ious = iou_matrix(gt_boxes, pr_boxes)
+            ref = {(int(pr_ids[p]), int(gt_ids[g])): iou
+                   for g, p, iou in _reference_greedy(ious, conf, min_iou)}
+            tp, fn, fp, n_rows = got[(img, cat)]
+            assert tp == ref
+            assert fn == set(gt_ids.tolist()) - {g for _, g in ref}
+            assert fp == set(pr_ids.tolist()) - {p for p, _ in ref}
+            assert n_rows == n_pr + n_gt - len(ref)
+
+
+def test_skewed_group_identical_to_greedy_match():
+    """A 30x30 group among tiny 2x2 groups: the kernel's matches for it
+    equal greedy_match run standalone on the same boxes."""
     rng = np.random.default_rng(5)
     groups = {(100, 0): (30, 30, rng)}
     for img in range(10):  # tiny groups around the monster
         groups[(img, 0)] = (2, 2, rng)
     batch = _batch_from_groups(groups)
+    tp = _kernel_groups([batch])[(100, 0)][0]
 
-    bulk_shapes = []
-    orig_bulk = M._bulk_greedy_shape
-
-    def spy(h_img, h_cat, ids, boxes, conf, ss, n_gt_s, n_pr_s, emit, min_iou):
-        bulk_shapes.append((n_gt_s, n_pr_s))
-        return orig_bulk(h_img, h_cat, ids, boxes, conf, ss, n_gt_s, n_pr_s,
-                         emit, min_iou)
-
-    monkeypatch.setattr(M, "_bulk_greedy_shape", spy)
-    results = list(M._match_batches(iter([batch])))
-    assert (30, 30) not in bulk_shapes  # monster went per-group
-
-    # reconstruct the monster group's matches from the kernel output
-    got = set()
-    for arr, out in results:
-        if arr is not None:
-            for i in range(len(arr["image_id"])):
-                if arr["image_id"][i] == 100:
-                    got.add((arr["prediction_id"][i], arr["groundtruth_id"][i]))
-        for t in out:
-            if t[0] == 100:
-                got.add((
-                    np.nan if t[2] is None else float(t[2]),
-                    np.nan if t[3] is None else float(t[3]),
-                ))
-    matched_got = {(int(p), int(g)) for p, g in got
-                   if p == p and g == g}  # drop nan (FN/FP rows)
-
-    # standalone reference on the same group
-    sel = batch["image_id"] == 100
-    is_gt = batch["is_groundtruth"][sel]
-    boxes = np.column_stack([batch[c][sel] for c in
-                             ("box_x_min", "box_y_min", "box_width", "box_height")])
-    ids = batch["id"][sel]
-    conf = batch["confidence"][sel]
-    ious = iou_matrix(boxes[is_gt], boxes[~is_gt])
-    ref = {(int(ids[~is_gt][p]), int(ids[is_gt][g]))
-           for g, p, _ in greedy_match(ious, conf[~is_gt])}
-    assert matched_got == ref
-    assert len(matched_got) > 0
+    gt_ids, gt_boxes, pr_ids, pr_boxes, conf = _group_arrays(batch, 100, 0)
+    ref = {(int(pr_ids[p]), int(gt_ids[g])): iou
+           for g, p, iou in greedy_match(iou_matrix(gt_boxes, pr_boxes), conf)}
+    assert tp == ref
+    assert len(ref) > 0
 
 
 def test_compute_matches_skewed_identical_to_standalone(spark):
@@ -275,22 +325,23 @@ def test_compute_matches_skewed_identical_to_standalone(spark):
     assert len(got) > 50  # dense canvas: plenty of true matches
 
 
-def test_greedy_match_streaming_identical_to_matrix():
-    """The O(n_gt)-memory streaming greedy produces IDENTICAL matches
-    to the matrix form on random crowded groups (same elementwise
-    arithmetic, same tie-breaks)."""
-    from lours_spark.evaluation.matching import greedy_match_streaming
+def test_blocked_kernel_identical_to_matrix(monkeypatch):
+    """A crowded group's IoUs are computed in blocks of confidence
+    ranks; with a tiny block budget (many blocks per group) the kernel
+    still gives IDENTICAL matches and iou values to greedy_match on the
+    full matrix, tied confidences included."""
+    import lours_spark.evaluation.matching as M
 
+    monkeypatch.setattr(M, "_BLOCK_CELLS", 64)
     rng = np.random.default_rng(21)
     for trial in range(5):
-        n_gt, n_pr = rng.integers(1, 120, size=2)
-        gt = rng.uniform(0, 100, size=(n_gt, 4))
-        pr = rng.uniform(0, 100, size=(n_pr, 4))
-        gt[:, 2:] = rng.uniform(1, 30, size=(n_gt, 2))
-        pr[:, 2:] = rng.uniform(1, 30, size=(n_pr, 2))
-        conf = rng.uniform(0, 1, size=n_pr)
+        groups = {(0, 0): tuple(int(v) for v in rng.integers(1, 120, size=2))
+                  + (rng,)}
+        batch = _batch_from_groups(groups)
+        pr = ~batch["is_groundtruth"]
         # duplicate some confidences to exercise tie-break parity
-        conf[: n_pr // 3] = conf[0]
-        ref = greedy_match(iou_matrix(gt, pr), conf)
-        got = greedy_match_streaming(gt, pr, conf)
-        assert got == ref
+        batch["confidence"][np.flatnonzero(pr)[: pr.sum() // 3]] = 0.5
+        gt_ids, gt_boxes, pr_ids, pr_boxes, conf = _group_arrays(batch, 0, 0)
+        ref = {(int(pr_ids[p]), int(gt_ids[g])): iou
+               for g, p, iou in greedy_match(iou_matrix(gt_boxes, pr_boxes), conf)}
+        assert _kernel_groups([batch])[(0, 0)][0] == ref

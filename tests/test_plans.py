@@ -213,7 +213,9 @@ def test_pii_signals_single_pass_no_shuffle(spark, suite):
 
 def test_embedding_near_dup_ivf_no_cartesian(spark, suite):
     """The IVF candidate path must stay bucketed — candidates come
-    from the centroid equi-join, never an all-pairs product."""
+    from the centroid-bucket groupBy, never an all-pairs product — and
+    the centroid probe (a MapInPandas stage) runs once: a self-join on
+    the centroid would re-run it per join leg."""
     from pyspark.sql import functions as F
 
     from lours_spark.operators.dedup import embedding_near_duplicates
@@ -225,6 +227,7 @@ def test_embedding_near_dup_ivf_no_cartesian(spark, suite):
     plan = _plan(pairs)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert plan.count("MapInPandas") == 1
 
 
 def test_repetition_signals_partial_aggregation(spark, suite):
@@ -551,19 +554,23 @@ def test_classifier_score_broadcast_weights_one_gram_exchange(spark, suite):
 def test_embedding_incremental_cached_sides_no_cartesian(spark, suite):
     """Incremental embedding mining: candidates come from the ONE
     groupBy bucket stage (no cartesian, no Python-side self-join), and
-    both signature frames sit behind materializations — the new batch
-    is eagerly localCheckpoint'ed by the operator (r11: a plain cache
-    raced its own three consumers inside one action), the facet's
-    inline-built index cached by the facet (a production index is a
-    parquet scan) — so each side's BLAS pass executes once even
-    though the miner references them three times (bucket rows + both
-    verify legs)."""
-    df = suite.q_embedding_incremental(spark, SF)
+    both signature frames sit behind eager localCheckpoints — the new
+    batch's by the operator, the facet's inline-built index by the
+    facet (a production index is a parquet scan) — so each side's BLAS
+    pass executes once though the miner references it three times
+    (bucket rows + both verify legs). No run leaves a CacheManager
+    entry behind (a function-local ``cache()`` would, for the session's
+    life)."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for _ in range(2):
+        df = suite.q_embedding_incremental(spark, SF)
+        assert cache_manager.isEmpty()
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    assert plan.count("InMemoryTableScan") >= 3  # 3 refs, cached index side
-    assert plan.count("Scan ExistingRDD") >= 3  # 3 refs, checkpointed new side
+    assert "InMemoryTableScan" not in plan
+    assert plan.count("Scan ExistingRDD") >= 6  # 3 refs x 2 checkpointed sides
 
 
 def test_version_delta_group_tier_aggregates_before_join(spark, tmp_path):
