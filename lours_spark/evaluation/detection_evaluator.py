@@ -123,6 +123,9 @@ class DetectionEvaluator:
                 if not rematch_per_iou
                 else None
             )
+            # a lazy persist, not operators/_materialize.py: this method
+            # starts no job, and localCheckpoint(eager=False) still runs
+            # the plan's shuffle stages at call time
             curves = _curves(
                 self.groundtruth.annotations,
                 self.predictions_dictionary[pname].annotations,

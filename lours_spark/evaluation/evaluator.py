@@ -534,7 +534,6 @@ def compute_precision_recall(
     rematch_per_iou: bool = False,
     gt_attrs: DataFrame | None = None,
     pred_attrs: DataFrame | None = None,
-    cache_curves: bool = True,
     stats: dict | None = None,
     matches: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
@@ -548,16 +547,14 @@ def compute_precision_recall(
     threshold at acceptance ``iou > t`` — what ``COCOeval`` does; use
     with ``ap_at_recall_grid`` for pycocotools-comparable numbers.
 
-    ``cache_curves`` materializes the curve frame (via
-    ``operators/_materialize.py`` — localCheckpoint by default, so the
-    blocks are freed when the returned frames drop instead of leaking
-    a CacheManager entry per call) in the same action as the row-count
-    probe that routes ``ap_both``: both AP outputs derive from it,
-    and a lazy persist is not enough — a downstream action that
-    consumes ``ap`` and ``ap_grid`` together (e.g. their join)
+    The curve frame is materialized (``operators/_materialize.py``;
+    the session picks the strategy) in the same action as the
+    row-count probe that routes ``ap_both``: both AP outputs derive
+    from it, and a lazy persist is not enough — a downstream action
+    that consumes ``ap`` and ``ap_grid`` together (e.g. their join)
     schedules both branch subtrees concurrently, so each would race to
     compute an unpopulated cache and the expensive matcher would run
-    twice. Pass False if you only consume ``curves``.
+    twice.
 
     One perfectly-matched prediction per groundtruth → AP 1.0:
 
@@ -578,32 +575,26 @@ def compute_precision_recall(
         groundtruth, predictions, ious, group_cols, rematch_per_iou,
         gt_attrs, pred_attrs, matches,
     )
-    tiny = False
-    if cache_curves:
-        # materialize (localCheckpoint by default), NOT a bare persist:
-        # a persisted curve frame has no unpersist path inside this
-        # function — one CacheManager entry would leak per call for the
-        # session's life unless the caller remembered to unpersist.
-        # Checkpoint blocks are freed by the ContextCleaner when the
-        # returned frames drop; a caller's unpersist() stays a harmless
-        # no-op. Strategy knob + executor-loss caveat:
-        # operators/_materialize.py.
-        from lours_spark.operators._materialize import materialize
+    # materialize, NOT a bare persist: a persisted curve frame has no
+    # unpersist path inside this function, so in local mode one
+    # CacheManager entry would leak per call for the session's life.
+    # The session picks the strategy (operators/_materialize.py).
+    from lours_spark.operators._materialize import materialize
 
-        curves = materialize(curves, eager=False)
-        # the probe is the action that fills the lazy checkpoint (under
-        # the cache strategy it reads the already-populated blocks)
-        n_curve_rows = curves.count()
-        if stats is not None:
-            stats["n_curve_rows"] = n_curve_rows
-        if n_curve_rows <= TINY_CURVE_ROWS:
-            # curve frames are tiny (groups × distinct confidences) but
-            # inherit the window shuffle's partitioning — fan the
-            # downstream AP jobs over a handful of tasks instead of 32
-            # near-empty ones (coalesce on a cached frame reads the
-            # cached blocks; nothing recomputes)
-            curves = curves.coalesce(4)
-            tiny = True
+    curves = materialize(curves, eager=False)
+    # the probe is the action that fills the lazy checkpoint (under
+    # the cache strategy it reads the already-populated blocks)
+    n_curve_rows = curves.count()
+    if stats is not None:
+        stats["n_curve_rows"] = n_curve_rows
+    tiny = n_curve_rows <= TINY_CURVE_ROWS
+    if tiny:
+        # curve frames are tiny (groups × distinct confidences) but
+        # inherit the window shuffle's partitioning — fan the
+        # downstream AP jobs over a handful of tasks instead of 32
+        # near-empty ones (coalesce on a pinned frame reads the
+        # pinned blocks; nothing recomputes)
+        curves = curves.coalesce(4)
     aps = average_precisions(curves, group_cols)
     ap_grid = ap_at_recall_grid(curves, group_cols)
     # both-APs-in-one-pass frame: on tiny curve frames the single

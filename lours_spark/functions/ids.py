@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from lours_spark.operators._materialize import materialize
+
 
 def global_row_number(
     df: DataFrame,
@@ -40,17 +42,17 @@ def global_row_number(
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     # size-aware: a source narrow enough to sit in ≤4 partitions gains
     # nothing from the two-phase shape (its single-window sort touches
-    # the same few partitions) and skips the persist + extra action
+    # the same few partitions) and skips the pin + extra action
     if df.rdd.getNumPartitions() <= 4:
         w = Window.orderBy(*cols)
         return df.withColumn(out_col, F.row_number().over(w) - 1 + start)
     arranged = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
     with_pid = arranged.withColumn("__pid", F.spark_partition_id())
-    # repartitionByRange SAMPLES boundaries per job — persist so the
-    # counts pass, the numbering pass, and every downstream action see
-    # the SAME partitioning (the persist must outlive consumers of the
-    # ids; MEMORY_AND_DISK spills rather than recomputes)
-    with_pid = with_pid.persist()
+    # repartitionByRange SAMPLES boundaries per job — pin the rows so
+    # the counts pass, the numbering pass, and every downstream action
+    # see the SAME partitioning; the counts pass reads every partition,
+    # so it is the action that fills the pin
+    with_pid = materialize(with_pid, eager=False)
     counts = (
         with_pid.groupBy("__pid").count().orderBy("__pid").collect()
     )

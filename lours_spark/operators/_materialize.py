@@ -1,57 +1,56 @@
 """Shared "compute once, read from N consumer legs" materialization.
 
-The default strategy is ``DataFrame.localCheckpoint``: blocks are
-freed by the ContextCleaner when the Python frame drops (a
-function-local ``cache()`` has no unpersist path once the result frame
-is returned, so it leaks one CacheManager entry per call for the
-session's life), and — unlike an unpopulated cache — concurrent
-branches of one action cannot race its population (three legs of the
-LSH pairs action each re-ran the dominant minhash pass up to 3×
-against a cache still being populated).
+:func:`materialize` is the one way the library pins a frame it reads
+more than once, and the session picks the strategy:
 
-EXECUTOR-LOSS CAVEAT: localCheckpoint blocks are NOT
-recomputable. Spark documents it as unsafe with dynamic allocation —
-if an executor holding checkpoint blocks is decommissioned (spot
-reclaim, scale-down, failure), every downstream action fails
-irrecoverably instead of recomputing the lineage as ``cache()`` would.
-On clusters with executor churn set::
-
-    spark.conf.set("spark.lours.materialize", "cache")
-
-to fall back to ``persist()`` + an eager populating ``count()``. The
-cache fallback recomputes on block loss but re-inherits the
-session-lifetime CacheManager entry — callers on such clusters should
-``spark.catalog.clearCache()`` (or unpersist by plan) at pipeline
-boundaries.
+- ``localCheckpoint`` on a ``local`` or ``local[...]`` master without
+  ``spark.dynamicAllocation.enabled=true``. No CacheManager entry: the
+  ContextCleaner frees the blocks when the frame drops (a
+  function-local ``cache()`` has no unpersist path once its frame is
+  returned, so it leaks one entry per call for the session's life).
+- ``persist()`` + an eager ``count()`` on any other master
+  (``local-cluster[...]``, ``spark://``, ``yarn``, ``k8s://``), whose
+  executors can go away. A lost cached block is recomputed from
+  lineage; a lost checkpoint block is not. Measured on
+  ``local-cluster[2,1,1024]``, 8 partitions, AQE off: after one
+  executor was killed, the next action on a
+  ``localCheckpoint(eager=True)`` frame failed with
+  ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``; under ``persist()`` +
+  ``count()`` it returned all 200000 rows. On a cluster, callers
+  release long-lived frames with ``unpersist()`` or
+  ``spark.catalog.clearCache()`` (no-ops on a checkpoint).
 
 ``eager=False`` defers only the final result stage: building the
 checkpoint RDD still runs the plan's shuffle map stages at call time
-(on Spark 4.1.2 with AQE, a group-by frame starts one job inside the
-call and two more on its first ``count()``). The first downstream
-action that touches all partitions then writes the checkpoint blocks
-as a side effect — it saves the separate populating job, not the
-upstream shuffle work. Use it when such an action is guaranteed; an
-eager site pays one extra job but is safe under partial-consumption
-plans (e.g. a broadcast-build that only reads some partitions
-first). ``eager`` only applies to
-``localCheckpoint``: under ``cache`` the populating ``count()`` always
-runs, because branches of one downstream action would otherwise race
-the unpopulated cache and each recompute ``df``.
+(on Spark 4.1.2 with AQE). The first downstream action that touches
+all partitions then writes the checkpoint blocks, which saves the
+separate populating job; use it only when such an action is
+guaranteed. Under ``persist()`` the populating ``count()`` always
+runs: branches of one downstream action would otherwise race the
+unpopulated cache and each recompute ``df``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-STRATEGY_CONF = "spark.lours.materialize"
+
+def _use_cache(master: str, dynamic_allocation: str) -> bool:
+    """True when executors can go away, so pinned blocks must stay
+    recomputable (see the module doc)."""
+    local = master == "local" or master.startswith("local[")
+    return not local or dynamic_allocation.strip().lower() == "true"
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` once for multi-leg consumption, per the
-    session's ``spark.lours.materialize`` strategy (``localCheckpoint``
-    default, ``cache`` for executor-churn clusters — see module doc)."""
-    strategy = df.sparkSession.conf.get(STRATEGY_CONF, "localCheckpoint")
-    if strategy == "cache":
+    """Materialize ``df`` once for multi-leg consumption:
+    ``localCheckpoint`` in local mode, ``persist()`` + ``count()`` on a
+    cluster or under dynamic allocation (see module doc)."""
+    conf = df.sparkSession.conf
+    if _use_cache(
+        conf.get("spark.master"),
+        conf.get("spark.dynamicAllocation.enabled", "false"),
+    ):
         out = df.persist()
         out.count()  # always: see the module doc's population race
         return out

@@ -672,11 +672,10 @@ def minhash_lsh_pairs(
 
     Runs eagerly: the shingle+minhash signature pass runs a
     distributed job AT CALL TIME (the signature frame is materialized
-    once because three legs of the pairs plan consume it — see
-    ``operators/_materialize.py``, including the executor-loss caveat
-    and the ``cache`` fallback for dynamic-allocation clusters).
-    Callers that only wanted a lazy plan (explain, conditional
-    pipelines) pay the full pass up front.
+    once because three legs of the pairs plan consume it; the session
+    picks the strategy, see ``operators/_materialize.py``). Callers
+    that only wanted a lazy plan (explain, conditional pipelines) pay
+    the full pass up front.
     """
     _check_oversize(oversize, max_bucket_size)
     rows_per_band = num_hashes // bands
@@ -685,8 +684,7 @@ def minhash_lsh_pairs(
     ).withColumnRenamed(id_col, "__id")
     # materialize once: the band explode and BOTH verify legs read
     # this subtree inside one action, which would otherwise re-run the
-    # dominant minhash pass per leg (why a checkpoint and not cache():
-    # operators/_materialize.py)
+    # dominant minhash pass per leg
     sig = materialize(sig, eager=True)
     candidates, dropped = _bucket_pairs(
         _band_rows(sig, bands, rows_per_band), ("band", "band_key"),
@@ -817,12 +815,12 @@ def minhash_lsh_pairs_incremental(
     upstream; an id on both sides would self-pair at jaccard 1.0).
 
     Materialization: the returned ``new_index_rows`` frame is
-    materialized here (strategy, executor-loss caveat and why not
-    ``cache()``: ``operators/_materialize.py``) — the pairs plan reads
-    it on THREE legs (band explode + both shingle-fetch sides) and the
-    caller's index append reads it again, so the batch's
-    shingle+minhash pass runs once, eagerly, at call time. A caller
-    ``unpersist()`` is a no-op under the default strategy.
+    materialized here (the session picks the strategy:
+    ``operators/_materialize.py``) — the pairs plan reads it on THREE
+    legs (band explode + both shingle-fetch sides) and the caller's
+    index append reads it again, so the batch's shingle+minhash pass
+    runs once, eagerly, at call time. A caller ``unpersist()`` frees
+    it on a cluster and is a no-op in local mode.
     """
     _check_oversize(oversize, max_bucket_size)
     rows_per_band = num_hashes // bands
@@ -1487,7 +1485,7 @@ def _embedding_near_dup_lsh(
         # the star leg / the ledger action and the bucket groupBy each
         # consume the signature subtree, and exchange reuse does not
         # cover map-side Python stages: materialize so the dominant
-        # BLAS pass runs once (operators/_materialize.py)
+        # BLAS pass runs once
         sig = materialize(sig, eager=True)
     candidates, dropped = _bucket_pairs(
         sig, ("table", "sig"), max_bucket_size, oversize

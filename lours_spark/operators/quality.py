@@ -788,8 +788,8 @@ def train_ngram_classifier(
     # at the materialize call, but the tot aggregate right below
     # consumes every partition, so that same action writes the
     # checkpoint blocks — eager=True paid one extra populating job for
-    # the same guarantee. Strategy + executor-loss caveat:
-    # operators/_materialize.py.
+    # the same guarantee. The session picks the strategy
+    # (operators/_materialize.py).
     from lours_spark.operators._materialize import materialize
 
     per_bucket = materialize(per_bucket, eager=False)

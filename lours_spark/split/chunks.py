@@ -10,7 +10,10 @@ keep-separate groups to "star" edges (every row linked to its group's
 min row id) and hands them to :func:`connected_components`, which
 counts the edges exactly and then runs either a driver union-find
 (small edge lists) or distributed min-label propagation (the same
-algorithm GraphFrames uses, no driver materialization). A single
+algorithm GraphFrames uses, no driver materialization). Every frame
+the graph pass re-reads is pinned through
+``operators/_materialize.py::materialize``, so the session picks the
+strategy. A single
 keep-separate column needs no graph at all: its components are the
 column's distinct values, one window.
 """
@@ -83,15 +86,15 @@ def connected_components(
 
     Hybrid execution, sized by the EDGE list, not the corpus: dedup
     pair graphs are tiny relative to the data that produced them. The
-    pair projection is persisted once and counted EXACTLY — the
+    pair projection is materialized once and counted EXACTLY — the
     driver/distributed decision depends only on the true edge count
     (not a nondeterministic ``limit`` sample), and both paths reuse the
-    persisted projection so the pair-mining pipeline runs once either
+    materialized projection so the pair-mining pipeline runs once either
     way. At or under ``driver_threshold`` edges a ``collect()`` feeds a
     union-find on the driver; bigger graphs run iterative distributed
     min-label propagation over node→neighbor min-joins (O(component
     diameter) rounds, ONE materializing job per round — the
-    convergence check scans the round's checkpointed output) — the
+    convergence check scans the round's materialized output) — the
     same algorithm GraphFrames uses, no driver materialization.
 
     >>> pairs = spark.createDataFrame(
@@ -106,16 +109,18 @@ def connected_components(
     >>> stats["path"], stats["edges"], stats["rounds"] <= 3
     ('distributed', 3, True)
     """
-    from pyspark.storagelevel import StorageLevel
+    from lours_spark.operators._materialize import materialize
 
     # materialize the (tiny) edge projection once: the exact count
-    # decides the path, and every downstream action — driver collect
-    # or per-round joins — reads this instead of re-running the
-    # pair-mining pipeline that produced the edges (at sf0.1 that
-    # re-mining was ~2.5s/round against milliseconds for the joins)
-    pe = pairs.select(
-        F.col(src).alias("__a"), F.col(dst).alias("__b")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # decides the path (and is the action that fills the lazy pin), and
+    # every downstream action — driver collect or per-round joins —
+    # reads this instead of re-running the pair-mining pipeline that
+    # produced the edges (at sf0.1 that re-mining was ~2.5s/round
+    # against milliseconds for the joins)
+    pe = materialize(
+        pairs.select(F.col(src).alias("__a"), F.col(dst).alias("__b")),
+        eager=False,
+    )
     n_edges = pe.count()
     if stats is not None:  # observability for scale evidence (SCALING.md)
         stats["edges"] = n_edges
@@ -154,15 +159,13 @@ def connected_components(
     spark = pairs.sparkSession
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     n_parts = max(1, min(default_parts, -(-n_edges // 500_000)))
-    edges = (
+    edges = materialize(
         pe.select(F.col("__a").alias("node_id"), F.col("__b").alias("__nbr"))
         .unionByName(
             pe.select(F.col("__b").alias("node_id"), F.col("__a").alias("__nbr"))
         )
         .repartition(n_parts, "node_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    edges.count()
     pe.unpersist()
     labels = (
         edges.select("node_id")
@@ -172,6 +175,7 @@ def connected_components(
         .repartition(n_parts, "node_id")
         .withColumn("label", F.col("node_id"))
     )
+    pinned = labels  # the previous round's pinned frame; the seed is not pinned
     for _ in range(max_iter):
         # PUSH form: joining edges to labels on __nbr (the pull form)
         # would use a key neither frame is partitioned by and cost three
@@ -179,43 +183,42 @@ def connected_components(
         # The edge list is symmetric ((a,b) and (b,a) both present), so
         # "min over my neighbors' labels" == "min over labels pushed to
         # me along edges": join edges⋈labels on node_id (both already
-        # hash(node_id, n_parts) → NO exchange), address each label to
-        # the edge's other end, and aggregate — ONE exchange per round,
-        # which the explicit repartition keys so the merged join below
-        # is exchange-free too.
-        nbr_min = (
+        # hash(node_id, n_parts) → NO exchange), send each label to the
+        # edge's other end and back to its own node (posexplode position
+        # 1: every node has an edge, so the aggregate sees its old
+        # label), and aggregate — ONE exchange per round, keyed by the
+        # explicit repartition so the next round's join is exchange-free
+        # too. The round reads the previous labels ONCE: a second read
+        # (a separate old⋈new merge join) doubles the logical plan per
+        # round under the cache strategy, which does not cut the plan
+        # as a checkpoint does (9 rounds ran the driver out of heap).
+        # ONE materializing job per round: the convergence probe only
+        # scans the pinned output. Once this round is pinned the
+        # previous one is released, so under the cache strategy only
+        # the returned frame stays cached.
+        merged = materialize(
             edges.join(labels, "node_id")
             .select(
-                F.col("__nbr").alias("node_id"), F.col("label").alias("__l")
+                F.posexplode(F.array("__nbr", "node_id")).alias("__self", "node_id"),
+                "label",
             )
             .repartition(n_parts, "node_id")
             .groupBy("node_id")
-            .agg(F.min("__l").alias("__nl"))
-        )
-        # ONE materializing job per round: the eager localCheckpoint
-        # runs the join+agg pipeline and pins its output; the
-        # convergence probe then only scans the checkpointed
-        # partitions instead of re-running the round's pipeline. The
-        # loop checkpoints directly rather than through
-        # operators/_materialize.py: a cache() fallback would hold one
-        # CacheManager entry per round (executor-loss caveat: see there)
-        merged = (
-            labels.join(nbr_min, "node_id", "left")
-            .withColumn(
-                "next",
-                F.least(F.col("label"), F.coalesce(F.col("__nl"), F.col("label"))),
+            .agg(
+                F.min("label").alias("label"),
+                F.max(F.when(F.col("__self") == 1, F.col("label"))).alias("__old"),
             )
-            .withColumn("__changed", F.col("next") != F.col("label"))
-            .select("node_id", F.col("next").alias("label"), "__changed")
-            .localCheckpoint()
+            .withColumn("__changed", F.col("label") != F.col("__old"))
         )
-        labels = merged.drop("__changed")
+        pinned.unpersist()
+        pinned, labels = merged, merged.select("node_id", "label")
         if stats is not None:
             stats["rounds"] += 1
         if merged.filter("__changed").limit(1).count() == 0:
             break
     else:
         edges.unpersist()
+        pinned.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "— long-chain components would be silently split into "

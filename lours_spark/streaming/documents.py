@@ -647,9 +647,9 @@ def _start_incremental_miner(
         new_idx.write.mode("overwrite").parquet(os.path.join(index_dir, tag))
         # the operators materialize the new batch's signature frame so
         # the pair mining and the index write share one hashing pass.
-        # Under the default localCheckpoint strategy this is a no-op
-        # (the ContextCleaner frees the blocks once the frame drops);
-        # under spark.lours.materialize=cache it frees the batch's
+        # In local mode this is a no-op (the ContextCleaner frees the
+        # checkpoint blocks once the frame drops); on a cluster, where
+        # the session picks the cache strategy, it frees the batch's
         # cached frame, which a long-lived stream would otherwise
         # accumulate per micro-batch
         new_idx.unpersist()

@@ -2045,16 +2045,9 @@ def q_detection_pr_ap(spark, sf_dir):
     # the pred leg's id % 5 filter pushes below the dedup aggregation,
     # so the gt and pred union legs stop being identical subtrees and
     # exchange reuse no longer covers them — the full scan + dedup
-    # pipeline ran TWICE. Materialize the deduped frame once with an
-    # eager localCheckpoint (r12; was persist()+count(), which leaked
-    # one CacheManager entry per call for the session's life — no
-    # unpersist path once the frame is returned into the evaluator.
-    # Checkpoint blocks are freed by the ContextCleaner when the frame
-    # drops, and both legs read the materialized rows the same way).
-    # A/B-measured min-of-4 at sf0.1 (r11): 3.70s materialized vs
-    # 4.11s dual-leg; r12 paired A/B persist-vs-localCheckpoint in
-    # OPTIMIZATION_r12.md. Strategy + executor-loss caveat:
-    # operators/_materialize.py.
+    # pipeline ran TWICE. Materialize the deduped frame once so both
+    # legs read the same pinned rows (the session picks the strategy:
+    # operators/_materialize.py).
     from lours_spark.operators._materialize import materialize
 
     ann = materialize(ann, eager=True)

@@ -187,7 +187,6 @@ def test_grouped_evaluation_attrs(spark):
         group_cols=["size_bin"],
         gt_attrs=g.select("id", "size_bin"),
         pred_attrs=d.select("id", "size_bin"),
-        cache_curves=False,
     )
     curves = res["curves"].filter(~F.col("is_pad")).collect()
     bins = {r.size_bin for r in curves}

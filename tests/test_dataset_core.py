@@ -272,6 +272,28 @@ def test_global_row_number_matches_single_window(spark):
     assert two_phase == single
 
 
+def test_global_row_number_leaves_no_cache_entry(spark):
+    """The two-phase path pins its range-partitioned rows through
+    materialize: in local mode that is a checkpoint, so no
+    CacheManager entry outlives the call."""
+    from pyspark.sql import Window
+
+    from lours_spark.functions.ids import global_row_number
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    df = spark.range(100).repartition(8)
+    got = {r["id"]: r["rn"] for r in global_row_number(df, ["id"], "rn").collect()}
+    want = {
+        r["id"]: r["rn"]
+        for r in df.withColumn(
+            "rn", F.row_number().over(Window.orderBy("id")) - 1
+        ).collect()
+    }
+    assert got == want
+    assert cache.isEmpty()
+
+
 def test_repr_and_empty(tiny_dataset, spark):
     s = repr(tiny_dataset)
     assert "images=40" in s

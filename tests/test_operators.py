@@ -877,39 +877,43 @@ def test_minhash_lsh_pairs_threads_hash_fn_to_signature_job(
     assert captured and "xxhash64" not in captured[0]
 
 
-def test_materialize_strategy_gate(spark):
-    """The spark.lours.materialize knob: default is
+def test_materialize_strategy_gate(spark, monkeypatch):
+    """materialize() picks its strategy from the session: local masters
     localCheckpoint (lineage cut, blocks freed by the ContextCleaner,
-    NOT recomputable on executor loss); 'cache' falls back to
-    persist() for dynamic-allocation clusters. Same rows either way."""
-    from lours_spark.operators._materialize import (
-        STRATEGY_CONF,
-        materialize,
-    )
+    NOT recomputable on executor loss); every cluster master and
+    dynamic allocation persist() + count(). Same rows either way."""
+    import lours_spark.operators._materialize as mat
+
+    for master in ("local", "local[4]", "local[*]", "local[4,2]"):
+        assert not mat._use_cache(master, "false"), master
+    for master in (
+        "local-cluster[2,1,1024]", "spark://h:7077", "yarn", "k8s://h",
+    ):
+        assert mat._use_cache(master, "false"), master
+    assert mat._use_cache("local[4]", "true")
 
     df = spark.range(10)
     expect = [(i,) for i in range(10)]
 
-    out = materialize(df, eager=True)
+    out = mat.materialize(df, eager=True)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan  # checkpointed, not a cache entry
     assert not out.storageLevel.useMemory
     assert sorted(tuple(r) for r in out.collect()) == expect
 
-    spark.conf.set(STRATEGY_CONF, "cache")
+    monkeypatch.setattr(mat, "_use_cache", lambda *_: True)
     try:
-        out2 = materialize(df, eager=True)
+        out2 = mat.materialize(df, eager=True)
         assert out2.storageLevel.useMemory  # a real CacheManager entry
         assert sorted(tuple(r) for r in out2.collect()) == expect
         # eager=False still populates the cache before any downstream
         # action: branches of one action would otherwise race it
         spark.catalog.clearCache()
-        out3 = materialize(spark.range(7), eager=False)
+        out3 = mat.materialize(spark.range(7), eager=False)
         infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
         assert any(i.numCachedPartitions() > 0 for i in infos)
         assert out3.count() == 7
     finally:
-        spark.conf.unset(STRATEGY_CONF)
         spark.catalog.clearCache()
 
 

@@ -763,6 +763,31 @@ def test_connected_components_hybrid(spark):
         }
 
 
+def test_connected_components_cache_strategy(spark, monkeypatch):
+    """Under the cluster (persist) strategy the distributed path gives
+    the same components and releases every per-round frame: at most
+    the returned labels stay cached."""
+    import lours_spark.operators._materialize as mat
+    from lours_spark.split.chunks import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)] + [(20, 21)], "id_a long, id_b long"
+    )
+    want = {i: 0 for i in range(9)} | {20: 20, 21: 20}
+    monkeypatch.setattr(mat, "_use_cache", lambda *_: True)
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        stats = {}
+        out = connected_components(chain, driver_threshold=0, stats=stats)
+        assert stats["path"] == "distributed" and stats["rounds"] > 2
+        assert {r.node_id: r.component_id for r in out.collect()} == want
+        assert len(set(jsc.getPersistentRDDs().keys()) - before) <= 1
+    finally:
+        spark.catalog.clearCache()
+
+
 def test_dedup_clusters_distributed_agrees_on_real_pairs(spark):
     """The forced-distributed CC twin (bench scale-evidence entry)
     produces exactly the hybrid query's clusters on the real documents
