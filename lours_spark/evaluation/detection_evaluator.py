@@ -12,6 +12,7 @@ outputs carry a ``model`` column, as the reference's do.
 from __future__ import annotations
 
 from collections.abc import Iterable, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -59,11 +60,27 @@ class DetectionEvaluator:
     add_predictions = add_predictions_dataset  # reference alias
 
     def _names(self, predictions_names) -> list[str]:
+        """The requested prediction-set names (all registered ones for
+        ``None``); ``ValueError`` when that is none, ``KeyError`` for a
+        name that is not registered."""
         if predictions_names is None:
-            return list(self.predictions_dictionary)
-        if isinstance(predictions_names, str):
-            return [predictions_names]
-        return list(predictions_names)
+            names = list(self.predictions_dictionary)
+        elif isinstance(predictions_names, str):
+            names = [predictions_names]
+        else:
+            names = list(predictions_names)
+        if not names:
+            raise ValueError(
+                "no prediction sets to evaluate: register one with "
+                "add_predictions_dataset"
+            )
+        unknown = [n for n in names if n not in self.predictions_dictionary]
+        if unknown:
+            raise KeyError(
+                f"unknown prediction sets {unknown}; registered: "
+                f"{sorted(self.predictions_dictionary)}"
+            )
+        return names
 
     # ----------------------------------------------------------- matches
     def compute_matches(
@@ -106,11 +123,12 @@ class DetectionEvaluator:
         fills it and later ones read it until :meth:`clear_cache`
         unpersists it. One action that reads both outputs at once (a
         join of curves and aps) would race the unfilled cache and run
-        the matcher twice: consume them one after the other. (The
-        functional
+        the matcher twice: consume them one after the other. The APs
+        come from the one AP aggregation,
+        :func:`~lours_spark.evaluation.evaluator.average_precisions`,
+        which the functional
         :func:`~lours_spark.evaluation.evaluator.compute_precision_recall`
-        also derives the grid AP and pays a row-count probe to route
-        it.)"""
+        also uses."""
         from lours_spark.evaluation.evaluator import _curves, average_precisions
 
         curves_parts, ap_parts = [], []
@@ -137,17 +155,14 @@ class DetectionEvaluator:
             self._persisted.append(curves)
             curves_parts.append(curves.withColumn("model", F.lit(pname)))
             ap_parts.append(
-                average_precisions(curves, list(groups)).withColumn(
-                    "model", F.lit(pname)
-                )
+                average_precisions(curves, list(groups))
+                .select(*groups, "iou_threshold", "average_precision")
+                .withColumn("model", F.lit(pname))
             )
-        curves = curves_parts[0]
-        for c in curves_parts[1:]:
-            curves = curves.unionByName(c)
-        aps = ap_parts[0]
-        for a in ap_parts[1:]:
-            aps = aps.unionByName(a)
-        return curves, aps
+        return (
+            reduce(DataFrame.unionByName, curves_parts),
+            reduce(DataFrame.unionByName, ap_parts),
+        )
 
     def compute_confusion_matrix(
         self,
@@ -182,10 +197,7 @@ class DetectionEvaluator:
                     )[pname],
                 ).withColumn("model", F.lit(pname))
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
 
     def clear_cache(self) -> None:
@@ -315,13 +327,10 @@ class CrowdDetectionEvaluator(DetectionEvaluator):
                     group_cols=list(groups),
                 ).withColumn("model", F.lit(pname))
             )
-        stats = stats_parts[0]
-        for s in stats_parts[1:]:
-            stats = stats.unionByName(s)
-        details = detail_parts[0]
-        for d in detail_parts[1:]:
-            details = details.unionByName(d)
-        return stats, details
+        return (
+            reduce(DataFrame.unionByName, stats_parts),
+            reduce(DataFrame.unionByName, detail_parts),
+        )
 
     def compute_normalized_precision_recall(self) -> DataFrame:
         """nAP (Song et al.) — unimplemented in the reference too."""

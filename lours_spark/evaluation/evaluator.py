@@ -27,26 +27,32 @@ threshold's windows because the window partition key is
 (groups, iou_threshold) and rows replicate under it. No per-threshold
 job, no driver loop over groups.
 
-AP additionally comes in COCO-accumulate form (``ap_at_recall_grid``):
-precision sampled onto a recall grid (101 points) and averaged — the
-form ``pycocotools.cocoeval.COCOeval.accumulate`` produces; parity is
-asserted in ``tests/test_cocoeval_parity.py`` against an independent
-NumPy implementation of the protocol.
+AP is ONE aggregation (:func:`average_precisions`) giving both the
+reference's Riemann AP and the COCO-accumulate grid AP (101 recall
+samples averaged, as ``pycocotools.cocoeval.COCOeval.accumulate`` does;
+NumPy protocol parity in ``tests/test_cocoeval_parity.py``). It
+collapses each curve to one row per distinct recall, exactly:
+
+- Riemann: in (recall asc, confidence desc, precision_env asc, is_pad
+  asc) order a run of equal-recall points adds its nonzero Δrecall on
+  its FIRST member only, so the sum needs only that member's envelope
+  (the tail pad ties a real confidence-0.0 point; the lower envelope
+  comes first).
+- grid: the sample at r is ``max(precision_env | recall ≥ r)`` over
+  non-pad points (the envelope is non-increasing along the curve), 0
+  past the last recall — a max of per-recall maxima.
+
+Recall is ``tp / n_targets``, so a (group × threshold) key has at most
+``n_groundtruth + 1`` distinct recalls: the per-key array is bounded
+by the group's groundtruth count, not by its curve length.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-#: curve frames at or below this row count take the single-aggregation
-#: array AP path (average_precisions_both); larger frames keep the
-#: distributed window/explode forms — a per-key array would concentrate
-#: a whole group's curve in one task
-TINY_CURVE_ROWS = 100_000
 
 
 def _results_table(
@@ -207,18 +213,11 @@ def precision_recall_curves(
     # does not cover the map-side python stage — so instead the first
     # row of each group carries a 3-element array (itself + both pads)
     # that explodes into the pad rows. One upstream pass total.
-    w_all = Window.partitionBy(*keys)
     w_rn = Window.partitionBy(*keys).orderBy(
         F.desc("confidence"), F.asc("recall")
     )
     point_cols = ["confidence", "precision", "recall", "is_pad", "precision_env"]
-    main = F.struct(
-        F.col("confidence"),
-        F.col("precision"),
-        F.col("recall"),
-        F.col("is_pad"),
-        F.col("precision_env"),
-    )
+    main = F.struct(*point_cols)
     head = F.struct(
         F.lit(1.0).alias("confidence"),
         F.lit(1.0).alias("precision"),
@@ -245,159 +244,59 @@ def precision_recall_curves(
     return exploded.select(*keys, *[F.col(f"__p.{c}").alias(c) for c in point_cols])
 
 
-def average_precisions(curves: DataFrame, group_cols: Sequence[str] = ("category_id",)) -> DataFrame:
-    """AP per (group × iou_threshold): right Riemann sum of the
-    enveloped precision over recall (reference ``util.py:305-321``)."""
-    keys = [*group_cols, "iou_threshold"]
-    w = Window.partitionBy(*keys).orderBy(
-        F.asc("recall"), F.desc("confidence")
-    )
-    d = F.col("recall") - F.coalesce(F.lag("recall").over(w), F.col("recall"))
-    # (docstring example lives on compute_precision_recall, the public
-    # entry point)
-    return (
-        curves.withColumn("__d", d)
-        .groupBy(*keys)
-        .agg(F.sum(F.col("precision_env") * F.col("__d")).alias("average_precision"))
-    )
-
-
-def ap_at_recall_grid(
+def average_precisions(
     curves: DataFrame,
     group_cols: Sequence[str] = ("category_id",),
     n_points: int = 101,
 ) -> DataFrame:
-    """COCO-accumulate AP: sample the enveloped precision at the first
-    curve point with recall ≥ r for each grid r (``searchsorted left``),
-    0 beyond max recall; AP = mean over the grid.
-
-    Because the envelope is non-increasing along the curve while recall
-    is non-decreasing, "value at first recall ≥ r" ==
-    ``max(precision_env | recall ≥ r)`` — which aggregates without a
-    join-back. The grid fan-out is a literal 101-element explode,
-    shuffled once on the same (groups, threshold) key — but it explodes
-    the DISTINCT-(recall) collapse of the curve, not every curve row:
-    for equal-recall runs only the maximum envelope (== the run's first
-    point, envelope non-increasing) can ever be sampled, so a
-    map-side-combining ``groupBy(keys, recall).max(env)`` first shrinks
-    the explode input from |curve| to |distinct recalls| — at corpus
-    scale (millions of distinct confidences, bounded distinct recalls)
-    that divides the generated-row volume by orders of magnitude with
-    bit-identical output (same doubles compared).
+    """Both APs per (group × iou_threshold): ``average_precision``,
+    the right Riemann sum of the enveloped precision over recall
+    (reference ``util.py:305-321``), and ``ap``, the COCO-accumulate
+    mean of ``n_points`` recall-grid samples. One exchange on the keys
+    covers both aggregations: one row per distinct recall, then one
+    recall-sorted array per key (exact and bounded: see module doc).
     """
     keys = [*group_cols, "iou_threshold"]
-    grid = F.lit(np.arange(n_points) / (n_points - 1))
-    # pads are excluded: the COCO accumulate arrays contain detection
-    # rows only — the synthetic (recall 0, precision 1) head point
-    # would otherwise inflate the r=0 sample by a full grid share
-    pts = (
-        curves.filter(~F.col("is_pad"))
-        .groupBy(*keys, "recall")
-        .agg(F.max("precision_env").alias("precision_env"))
-        .withColumn("r", F.explode(grid))
-    )
-    per_point = pts.groupBy(*keys, "r").agg(
-        F.max(
-            F.when(F.col("recall") >= F.col("r"), F.col("precision_env"))
-        ).alias("p")
-    )
-    return per_point.groupBy(*keys).agg(
-        (F.sum(F.coalesce(F.col("p"), F.lit(0.0))) / F.lit(float(n_points))).alias(
-            "ap"
-        )
-    )
-
-
-def average_precisions_both(
-    curves: DataFrame,
-    group_cols: Sequence[str] = ("category_id",),
-    n_points: int = 101,
-) -> DataFrame:
-    """Riemann AP and COCO-grid AP in ONE aggregation pass — the
-    small-curve fast path.
-
-    :func:`average_precisions` + :func:`ap_at_recall_grid` each shuffle
-    the curve frame again (window + groupBy, explode×grid + 2 groupBys)
-    and are then joined — ~8 stage waves for frames that are tiny by
-    construction (one row per group × distinct confidence). Here each
-    (group × iou_threshold) key gathers its curve points into a sorted
-    array once and evaluates both definitions as array expressions:
-
-    - Riemann sum (reference ``util.py:305-321``): fold over points in
-      (recall asc, confidence desc) order accumulating
-      ``Σ precision_env · Δrecall`` — same order and same per-element
-      arithmetic as the window form's ``lag``-difference.
-    - grid AP (COCOeval accumulate): for each of the ``n_points`` grid
-      recalls ``r``, ``max(precision_env | recall ≥ r)`` over non-pad
-      points (envelope is non-increasing, so max == value at the first
-      qualifying point), 0 past max recall; AP = mean.
-
-    One shuffle, no explode, no join. Use when the collapsed curve
-    frame is small (``compute_precision_recall`` routes on its existing
-    row-count probe); at corpus scale with millions of distinct
-    confidences per group, keep the distributed window/explode forms —
-    a per-key array would concentrate a whole group in one task.
-    Parity with the window forms is asserted in
-    ``tests/test_evaluator.py``.
-    """
-    keys = [*group_cols, "iou_threshold"]
-    # recall is NULL for zero-groundtruth groups (compute_precision_recall
-    # emits None when __ntargets == 0); the window form's F.sum skips the
-    # NULL env·Δrecall products and returns 0.0 there, but a fold
-    # null-propagates through the accumulator. Coalesce to 0.0: every
-    # delta in such a group is then 0, so the fold also yields 0.0, and
-    # the grid samples stay 0.0 because env is 0 on all non-pad points
-    # (no groundtruth → no true positives → precision 0).
-    pt = F.struct(
-        F.coalesce(F.col("recall"), F.lit(0.0)).alias("recall"),
+    # zero-groundtruth groups have NULL recall: as 0.0 every Δrecall is
+    # 0 (Riemann AP 0.0), and every non-pad env is 0 (grid AP 0.0)
+    first = F.struct(
         (-F.col("confidence")).alias("negc"),
         F.col("precision_env").alias("env"),
-        F.col("is_pad").alias("is_pad"),
+        "is_pad",
     )
-    agg = curves.groupBy(*keys).agg(
-        F.sort_array(F.collect_list(pt)).alias("__pts")
-    )
-    # Riemann: fold with (prev_recall, acc); first element's Δ is 0,
-    # matching the window form's coalesce(lag, recall)
-    riemann = F.aggregate(
-        F.col("__pts"),
-        F.struct(
-            F.element_at("__pts", 1).getField("recall").alias("prev"),
-            F.lit(0.0).alias("s"),
-        ),
-        lambda acc, x: F.struct(
-            x.getField("recall").alias("prev"),
-            (
-                acc.getField("s")
-                + x.getField("env") * (x.getField("recall") - acc.getField("prev"))
-            ).alias("s"),
-        ),
-        lambda acc: acc.getField("s"),
-    )
-    agg = agg.withColumn(
-        "__np", F.expr("filter(__pts, x -> NOT x.is_pad)")
-    ).withColumn("average_precision", riemann)
-    grid = F.lit(np.arange(n_points) / (n_points - 1))
-    samples = F.transform(
-        grid,
-        lambda r: F.coalesce(
-            F.array_max(
-                F.transform(
-                    F.filter(
-                        F.col("__np"), lambda x: x.getField("recall") >= r
-                    ),
-                    lambda x: x.getField("env"),
-                )
+    per_recall = (
+        curves.repartition(*keys)
+        .groupBy(*keys, F.coalesce("recall", F.lit(0.0)).alias("recall"))
+        .agg(
+            F.min(first).getField("env").alias("first_env"),
+            F.max(F.when(~F.col("is_pad"), F.col("precision_env"))).alias(
+                "grid_env"
             ),
-            F.lit(0.0),
-        ),
+        )
     )
-    mean_grid = (
-        F.aggregate(samples, F.lit(0.0), lambda acc, p: acc + p)
-        / F.lit(float(n_points))
+    pts = per_recall.groupBy(*keys).agg(
+        F.sort_array(
+            F.collect_list(F.struct("recall", "first_env", "grid_env"))
+        ).alias("__pts")
     )
-    return agg.withColumn("ap", mean_grid).select(
-        *keys, "average_precision", "ap"
+    # SQL higher-order functions: one parser call each, where the
+    # Column-lambda form costs a driver round trip per node
+    # Riemann: fold (prev recall, sum) over the points; the first Δ is 0
+    riemann = F.expr(
+        "aggregate(__pts, named_struct('prev', __pts[0].recall, 's', 0D),"
+        " (acc, x) -> named_struct('prev', x.recall,"
+        " 's', acc.s + x.first_env * (x.recall - acc.prev)), acc -> acc.s)"
+    )
+    # grid sample at r: max non-pad envelope at recall ≥ r (array_max
+    # skips the NULLs of pad-only recalls), 0 past max recall
+    grid = f"transform(sequence(0, {n_points - 1}), i -> i / {n_points - 1}D)"
+    mean_grid = F.expr(
+        f"aggregate(transform({grid}, r -> coalesce(array_max(transform("
+        "filter(__pts, x -> x.recall >= r), x -> x.grid_env)), 0D)),"
+        f" 0D, (acc, p) -> acc + p) / {n_points}D"
+    )
+    return pts.select(
+        *keys, riemann.alias("average_precision"), mean_grid.alias("ap")
     )
 
 
@@ -534,7 +433,6 @@ def compute_precision_recall(
     rematch_per_iou: bool = False,
     gt_attrs: DataFrame | None = None,
     pred_attrs: DataFrame | None = None,
-    stats: dict | None = None,
     matches: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """End-to-end multi-IoU grouped evaluation (reference
@@ -544,17 +442,15 @@ def compute_precision_recall(
     thresholds applied at curve time — the cheap path (one matcher pass
     regardless of ``len(ious)``).
     ``rematch_per_iou=True`` (COCO protocol): one greedy matching per
-    threshold at acceptance ``iou > t`` — what ``COCOeval`` does; use
-    with ``ap_at_recall_grid`` for pycocotools-comparable numbers.
+    threshold at acceptance ``iou > t`` — what ``COCOeval`` does; read
+    ``ap_grid`` for pycocotools-comparable numbers.
 
-    The curve frame is materialized (``operators/_materialize.py``;
-    the session picks the strategy) in the same action as the
-    row-count probe that routes ``ap_both``: both AP outputs derive
-    from it, and a lazy persist is not enough — a downstream action
-    that consumes ``ap`` and ``ap_grid`` together (e.g. their join)
-    schedules both branch subtrees concurrently, so each would race to
-    compute an unpopulated cache and the expensive matcher would run
-    twice.
+    Returns ``ap_both`` (both APs, one :func:`average_precisions`
+    aggregation), its two AP columns as ``ap`` and ``ap_grid``, and the
+    ``curves`` they read. The curve frame is materialized
+    (``operators/_materialize.py``): a lazy persist is not enough — an
+    action that consumes two outputs together (e.g. their join) would
+    race to compute an unpopulated cache and run the matcher twice.
 
     One perfectly-matched prediction per groundtruth → AP 1.0:
 
@@ -577,34 +473,15 @@ def compute_precision_recall(
     )
     # materialize, NOT a bare persist: a persisted curve frame has no
     # unpersist path inside this function, so in local mode one
-    # CacheManager entry would leak per call for the session's life.
-    # The session picks the strategy (operators/_materialize.py).
+    # CacheManager entry would leak per call for the session's life
     from lours_spark.operators._materialize import materialize
 
-    curves = materialize(curves, eager=False)
-    # the probe is the action that fills the lazy checkpoint (under
-    # the cache strategy it reads the already-populated blocks)
-    n_curve_rows = curves.count()
-    if stats is not None:
-        stats["n_curve_rows"] = n_curve_rows
-    tiny = n_curve_rows <= TINY_CURVE_ROWS
-    if tiny:
-        # curve frames are tiny (groups × distinct confidences) but
-        # inherit the window shuffle's partitioning — fan the
-        # downstream AP jobs over a handful of tasks instead of 32
-        # near-empty ones (coalesce on a pinned frame reads the
-        # pinned blocks; nothing recomputes)
-        curves = curves.coalesce(4)
-    aps = average_precisions(curves, group_cols)
-    ap_grid = ap_at_recall_grid(curves, group_cols)
-    # both-APs-in-one-pass frame: on tiny curve frames the single
-    # sorted-array aggregation (no explode, no join) replaces ~8 stage
-    # waves with 2; past the size probe, fall back to joining the
-    # distributed window/explode forms
-    if tiny:
-        ap_both = average_precisions_both(curves, group_cols)
-    else:
-        ap_both = aps.join(ap_grid, [*group_cols, "iou_threshold"])
-    if stats is not None:
-        stats["ap_both_path"] = "array_fast" if tiny else "distributed_join"
-    return {"curves": curves, "ap": aps, "ap_grid": ap_grid, "ap_both": ap_both}
+    curves = materialize(curves)
+    keys = [*group_cols, "iou_threshold"]
+    ap_both = average_precisions(curves, group_cols)
+    return {
+        "curves": curves,
+        "ap": ap_both.select(*keys, "average_precision"),
+        "ap_grid": ap_both.select(*keys, "ap"),
+        "ap_both": ap_both,
+    }

@@ -1860,11 +1860,11 @@ FROM pred p WHERE NOT EXISTS (SELECT 1 FROM matches m WHERE m.m_pid = p.id)
 # then the reference PR-curve construction (results frame → distinct-
 # confidence collapse → cumulative windows → monotone envelope → pad
 # points) and BOTH AP definitions. Tie order in the Riemann lag window
-# replicates average_precisions_both's struct sort exactly:
-# (recall ASC, confidence DESC, precision_env ASC, is_pad ASC) — the
-# tail pad shares (recall, confidence=0.0) with the real lowest-
-# confidence point, and the fold gives the nonzero Δrecall of that tie
-# run to the LOWEST-envelope member.
+# replicates the tie rule of evaluator.average_precisions, the one AP
+# aggregation: (recall ASC, confidence DESC, precision_env ASC,
+# is_pad ASC) — the tail pad shares (recall, confidence=0.0) with the
+# real lowest-confidence point, and the nonzero Δrecall of that tie
+# run goes to the LOWEST-envelope member.
 ORACLE_DETECTION_PR_AP = (
     _dd_matches_cte(pred_filter="WHERE (id + 10000000) % 5 != 0")
     + """,

@@ -76,14 +76,12 @@ QUERIES = [
 ]
 
 
-def pr_ap_routing_probe(spark, sf_dir: str) -> dict:
+def pr_ap_large_curve_probe(spark, sf_dir: str) -> dict:
     """Drive a LARGE curve frame through compute_precision_recall and
-    record the row-count probe + chosen AP path: detection_pr_ap's own
-    data quantizes confidence to 97 levels (tiny curve, array path —
-    correct), so this probe uses near-unique confidences (what a real
-    detector emits) on a prediction slice, proving frames past
-    TINY_CURVE_ROWS route to the distributed window/explode forms and
-    complete at 100x."""
+    record its row count and the AP wall time: detection_pr_ap's own
+    data quantizes confidence to 97 levels (a tiny curve), so this
+    probe uses near-unique confidences (what a real detector emits) on
+    a prediction slice."""
     from pyspark.sql import functions as F
 
     from lours_spark.evaluation.evaluator import compute_precision_recall
@@ -100,15 +98,19 @@ def pr_ap_routing_probe(spark, sf_dir: str) -> dict:
             "confidence",
             (F.abs(F.xxhash64("id")) % 10_000_019).cast("double") / 10_000_019.0,
         )
-        .filter(F.col("id") % 41 == 0)  # ~2.4% slice: >>TINY_CURVE_ROWS,
-        # but the 101-point grid explode stays in the seconds range
+        .filter(F.col("id") % 41 == 0)  # ~2.4% slice
     )
-    stats: dict = {}
     t0 = time.time()
-    res = compute_precision_recall(ann, pred, ious=[0.2, 0.5], stats=stats)
-    stats["ap_rows"] = res["ap_both"].count()
-    stats["sec"] = round(time.time() - t0, 2)
-    return stats
+    res = compute_precision_recall(ann, pred, ious=[0.2, 0.5])
+    pin_sec = time.time() - t0  # the matcher and the curve pin
+    t0 = time.time()
+    ap_rows = res["ap_both"].count()
+    return {
+        "curve_rows": res["curves"].count(),
+        "ap_rows": ap_rows,
+        "pin_sec": round(pin_sec, 2),
+        "ap_sec": round(time.time() - t0, 2),
+    }
 
 
 def main() -> None:
@@ -151,8 +153,8 @@ def main() -> None:
     # large-curve AP routing observability at 100x
     wait_for_calm()
     spark.catalog.clearCache()
-    out["pr_ap_routing"] = pr_ap_routing_probe(spark, scaled)
-    print(f"# 100x pr_ap_routing: {out['pr_ap_routing']}", file=sys.stderr)
+    out["pr_ap_large_curve"] = pr_ap_large_curve_probe(spark, scaled)
+    print(f"# 100x pr_ap_large_curve: {out['pr_ap_large_curve']}", file=sys.stderr)
 
     # round 7: matcher-fed confusion + WebDataset shard I/O at 100x
     wait_for_calm()

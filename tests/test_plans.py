@@ -62,15 +62,44 @@ def test_filter_semijoin_pushdown(spark, suite):
     assert "BroadcastHashJoin" in plan or "LeftSemi" in plan
 
 
-def test_no_python_row_udfs_in_gate_queries(spark, suite):
+def test_no_python_row_udfs_in_gate_queries(spark, suite, monkeypatch):
     """Hot paths stay JVM-side: BatchEvalPython (row-at-a-time Python
     UDF) must not appear in any gate query plan; Arrow-batched
-    mapInPandas/FlatMapGroupsInPandas are the only Python surfaces."""
+    mapInPandas/FlatMapGroupsInPandas are the only Python surfaces.
+    A pin reads back as a bare scan in the plan downstream of it, so
+    every frame a query pins through ``materialize`` is checked too
+    (captured by a spy in each module that binds the function)."""
+    import importlib
+    import pkgutil
+    import sys
+
+    import lours_spark
+    from lours_spark.operators import _materialize
+
+    # import every module first, so each module-level binding of
+    # materialize exists before the spy goes in (and is restored after)
+    for m in pkgutil.walk_packages(lours_spark.__path__, "lours_spark."):
+        importlib.import_module(m.name)
+    real = _materialize.materialize
+    pinned: list[tuple[str, str]] = []
+    current = [""]
+
+    def spy(df, eager=True):
+        pinned.append((current[0], _plan(df)))
+        return real(df, eager=eager)
+
+    for mod in [m for n, m in sys.modules.items() if n.startswith("lours_spark")]:
+        if getattr(mod, "materialize", None) is real:
+            monkeypatch.setattr(mod, "materialize", spy)
     for name, fn in suite.QUERIES.items():
         if name in ("balanced_split",):  # driver-hybrid: plan built lazily
             continue
+        current[0] = name
         plan = _plan(fn(spark, SF))
         assert "BatchEvalPython" not in plan, name
+    assert pinned, "no gate query pinned a frame: the spy saw nothing"
+    for name, plan in pinned:
+        assert "BatchEvalPython" not in plan, f"{name} (upstream of a pin)"
 
 
 def test_reset_index_from_mapping_unmapped_two_phase(spark):
@@ -314,11 +343,10 @@ def test_lsh_bucket_topk_broadcasts_queries(spark, suite):
     assert "BroadcastHashJoin" in plan
 
 
-def test_ap_both_tiny_path_single_aggregation(spark, suite):
-    """On small curve frames the combined-AP frame must be ONE
-    aggregation over the cached curves: a single hash exchange, no
-    grid explode, no join — the window/explode forms (with their ~8
-    stage waves) are reserved for curve frames past the size probe."""
+def test_ap_both_single_aggregation_over_pinned_curves(spark, suite):
+    """The combined-AP frame is ONE aggregation over the pinned curves:
+    a single hash exchange, no grid explode, no join, no Python stage
+    (the matcher runs upstream of the pin)."""
     from pyspark.sql import functions as F
 
     from lours_spark.evaluation.evaluator import compute_precision_recall
@@ -334,13 +362,8 @@ def test_ap_both_tiny_path_single_aggregation(spark, suite):
     res = compute_precision_recall(ann, pred, ious=[0.2, 0.5])
     try:
         plan = _plan(res["ap_both"])
-        # reads the MATERIALIZED curve frame, not the matcher pipeline
-        # (r12: compute_precision_recall checkpoints instead of
-        # persisting — the leak fix — so the curve lineage is truncated
-        # out of the plan entirely and the whole visible plan is the
-        # AP aggregation; the assertions below therefore cover the
-        # full plan, a strictly stronger form of the r11 split-at-
-        # InMemoryRelation check)
+        # the pin truncates the curve lineage, so the whole visible
+        # plan is the AP aggregation
         assert "ExistingRDD" in plan
         assert "MapInArrow" not in plan and "MapInPandas" not in plan
         # one aggregation exchange; no join nodes, no grid explode

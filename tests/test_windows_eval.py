@@ -241,50 +241,6 @@ def test_evaluator_parquet_roundtrip(tiny_dataset, tmp_path, spark):
     ev.to_parquet(out, overwrite=True)
 
 
-def test_ap_both_routing_probe(spark, monkeypatch):
-    """compute_precision_recall routes ap_both on the curve row-count
-    probe: small frames → single-aggregation array path, frames past
-    TINY_CURVE_ROWS → the distributed window/explode join. Both paths
-    must return the same values, and the stats out-param must report
-    the probe + chosen path (scale-evidence observability)."""
-    from lours_spark.evaluation import evaluator as ev
-
-    gt = spark.createDataFrame(
-        [(i, i % 10, i % 2, 5.0 * (i % 6), 4.0 * (i % 5), 10.0, 8.0)
-         for i in range(60)],
-        "id long, image_id long, category_id int, box_x_min double,"
-        " box_y_min double, box_width double, box_height double",
-    )
-    pred = gt.select(
-        (F.col("id") + 1000).alias("id"), "image_id", "category_id",
-        (F.col("box_x_min") + 1.0).alias("box_x_min"), "box_y_min",
-        "box_width", "box_height",
-        ((F.col("id") % 13) / 13.0).alias("confidence"),
-    )
-    s_small: dict = {}
-    res_small = ev.compute_precision_recall(gt, pred, ious=[0.3], stats=s_small)
-    small = {
-        (r["category_id"], r["iou_threshold"]): (r["average_precision"], r["ap"])
-        for r in res_small["ap_both"].collect()
-    }
-    assert s_small["ap_both_path"] == "array_fast"
-    assert s_small["n_curve_rows"] > 0
-
-    monkeypatch.setattr(ev, "TINY_CURVE_ROWS", 1)
-    s_big: dict = {}
-    res_big = ev.compute_precision_recall(gt, pred, ious=[0.3], stats=s_big)
-    big = {
-        (r["category_id"], r["iou_threshold"]): (r["average_precision"], r["ap"])
-        for r in res_big["ap_both"].collect()
-    }
-    assert s_big["ap_both_path"] == "distributed_join"
-    assert s_big["n_curve_rows"] == s_small["n_curve_rows"]
-    assert set(big) == set(small)
-    for k in small:
-        assert big[k][0] == pytest.approx(small[k][0], abs=1e-9)
-        assert big[k][1] == pytest.approx(small[k][1], abs=1e-9)
-
-
 def _jobs_in_group(spark, group, fn):
     """Run ``fn`` under Spark job group ``group``; return its result and
     the ids of the jobs it started. A sentinel job in its own group
@@ -311,13 +267,13 @@ def _jobs_in_group(spark, group, fn):
     return out, sorted(tracker.getJobIdsForGroup(group))
 
 
-def test_functional_probe_is_the_materializing_action(spark):
-    """compute_precision_recall fills its curve checkpoint in the
-    row-count probe that routes ap_both: the call starts exactly the
-    jobs of one count() of the unmaterialized curve plan, with no
-    separate populating action before the probe."""
+def test_functional_call_runs_one_curve_action(spark):
+    """compute_precision_recall starts exactly the jobs of pinning the
+    curve plan once: no row-count probe, and no AP job until an output
+    is consumed."""
     from lours_spark.evaluation import evaluator as ev
     from lours_spark.evaluation.matching import compute_matches
+    from lours_spark.operators._materialize import materialize
 
     gt = spark.createDataFrame(
         [(i, i % 10, i % 2, 5.0 * (i % 6), 4.0 * (i % 5), 10.0, 8.0)
@@ -331,17 +287,16 @@ def test_functional_probe_is_the_materializing_action(spark):
         "box_width", "box_height",
         ((F.col("id") % 13) / 13.0).alias("confidence"),
     )
-    stats: dict = {}
-    _, call_jobs = _jobs_in_group(
+    res, call_jobs = _jobs_in_group(
         spark, "pr-call",
-        lambda: ev.compute_precision_recall(gt, pred, ious=[0.3], stats=stats),
+        lambda: ev.compute_precision_recall(gt, pred, ious=[0.3]),
     )
     plan = ev.precision_recall_curves(
         compute_matches(gt, pred), [0.3], ["category_id"]
     )
-    n_rows, count_jobs = _jobs_in_group(spark, "pr-count", plan.count)
-    assert stats["n_curve_rows"] == n_rows
-    assert len(call_jobs) == len(count_jobs) > 0
+    pinned, pin_jobs = _jobs_in_group(spark, "pr-pin", lambda: materialize(plan))
+    assert len(call_jobs) == len(pin_jobs) > 0
+    assert res["curves"].count() == pinned.count()
 
 
 @pytest.mark.parametrize("rematch", [False, True])
@@ -377,79 +332,116 @@ def test_facade_precision_recall_is_lazy(spark, tiny_dataset, rematch):
     ev.clear_cache()
 
 
-def test_average_precisions_both_matches_window_forms(spark):
-    """The single-aggregation tiny-curve path (sorted-array fold +
-    grid sampling as array expressions) must reproduce the distributed
-    window/explode forms' AP values on the same curve frame."""
+def test_evaluator_needs_registered_prediction_sets(tiny_dataset):
+    """Every metric call resolves its prediction-set names first: none
+    registered is a ValueError, an unknown name a KeyError naming the
+    registered sets."""
+    from lours_spark.evaluation.detection_evaluator import CrowdDetectionEvaluator
+
+    ev = CrowdDetectionEvaluator(tiny_dataset)
+    calls = (
+        ev.compute_precision_recall,
+        ev.compute_confusion_matrix,
+        ev.compute_count_error,
+    )
+    for call in calls:
+        with pytest.raises(ValueError, match="no prediction sets"):
+            call()
+    ev.add_predictions_dataset("model", tiny_dataset)
+    for call in calls:
+        with pytest.raises(KeyError, match=r"registered: \['model'\]"):
+            call("other")
+
+
+def _ap_reference(points, n_points=101):
+    """Both AP definitions over one key's curve points
+    ``(recall, confidence, precision_env, is_pad)`` in NumPy: the
+    Riemann sum of the envelope over recall, walking the points in
+    (recall, confidence desc, precision_env, is_pad) order, and the
+    mean over a recall grid of the largest non-pad envelope at recall
+    ≥ r (0 past the last recall)."""
+    import numpy as np
+
+    rec, conf, env, pad = (np.array(c, dtype=float) for c in zip(*points))
+    rec = np.nan_to_num(rec)  # zero-groundtruth keys have NULL recall
+    order = np.lexsort((pad, env, -conf, rec))
+    rec, env, pad = rec[order], env[order], pad[order].astype(bool)
+    riemann = float(np.sum(env[1:] * np.diff(rec)))
+    samples = [
+        env[~pad & (rec >= r)].max(initial=0.0)
+        for r in np.arange(n_points) / (n_points - 1)
+    ]
+    return riemann, float(np.mean(samples))
+
+
+def test_average_precisions_match_numpy_reference(spark):
+    """The one AP aggregation reproduces a NumPy evaluation of both AP
+    definitions on the same curve frame, including a zero-groundtruth
+    group and a true positive at confidence 0.0, whose point ties the
+    tail pad's (recall, confidence)."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from lours_spark.evaluation.evaluator import (
-        ap_at_recall_grid,
-        average_precisions,
-        average_precisions_both,
-        compute_precision_recall,
-    )
+    from lours_spark.evaluation.evaluator import compute_precision_recall
 
     rng = random.Random(3)
+    gt_rows = [
+        (i, i % 50, i % 4, 10.0 * (i % 7), 8.0 * (i % 5), 20.0, 16.0)
+        for i in range(400)
+    ]
+    # category 7: three exact detections, the last at confidence 0.0
+    gt_rows += [(500 + i, 60, 7, 30.0 * i, 0.0, 20.0, 16.0) for i in range(3)]
     gt = spark.createDataFrame(
-        [
-            (i, i % 50, i % 4, 10.0 * (i % 7), 8.0 * (i % 5), 20.0, 16.0)
-            for i in range(400)
-        ],
+        gt_rows,
         "id long, image_id long, category_id int, box_x_min double,"
         " box_y_min double, box_width double, box_height double",
     )
     # i % 5 (vs the groundtruth's i % 4) makes category 4 a
-    # zero-groundtruth group: its recall is NULL end-to-end, which the
-    # window form's NULL-skipping F.sum turns into AP 0.0 — the fold
-    # path must agree instead of null-propagating (ADVICE r4).
+    # zero-groundtruth group: its recall is NULL end to end
+    pred_rows = [
+        (
+            1000 + i,
+            i % 50,
+            i % 5,
+            10.0 * (i % 7) + rng.uniform(-4, 4),
+            8.0 * (i % 5) + rng.uniform(-4, 4),
+            20.0,
+            16.0,
+            rng.random(),
+        )
+        for i in range(360)
+    ]
+    pred_rows += [
+        (2000 + i, 60, 7, 30.0 * i, 0.0, 20.0, 16.0, c)
+        for i, c in enumerate((0.9, 0.5, 0.0))
+    ]
     pred = spark.createDataFrame(
-        [
-            (
-                1000 + i,
-                i % 50,
-                i % 5,
-                10.0 * (i % 7) + rng.uniform(-4, 4),
-                8.0 * (i % 5) + rng.uniform(-4, 4),
-                20.0,
-                16.0,
-                rng.random(),
-            )
-            for i in range(360)
-        ],
+        pred_rows,
         "id long, image_id long, category_id int, box_x_min double,"
         " box_y_min double, box_width double, box_height double,"
         " confidence double",
     )
     res = compute_precision_recall(gt, pred, ious=[0.3, 0.5])
-    curves = res["curves"]
     keys = ["category_id", "iou_threshold"]
-    want_ap = {
-        tuple(r[k] for k in keys): r["average_precision"]
-        for r in average_precisions(curves).collect()
-    }
-    want_grid = {
-        tuple(r[k] for k in keys): r["ap"]
-        for r in ap_at_recall_grid(curves).collect()
-    }
-    zero_gt = [k for k in want_ap if k[0] == 4]
-    assert zero_gt, "category 4 must reach the curve frame with no GT"
-    for k in zero_gt:
-        assert want_ap[k] == pytest.approx(0.0, abs=1e-12)
-        assert want_grid[k] == pytest.approx(0.0, abs=1e-12)
-    got = average_precisions_both(curves).collect()
-    assert len(got) == len(want_ap) > 0
-    for r in got:
-        k = tuple(r[x] for x in keys)
-        assert r["average_precision"] == pytest.approx(want_ap[k], abs=1e-9), k
-        assert r["ap"] == pytest.approx(want_grid[k], abs=1e-9), k
-    # and the ap_both frame the evaluator returns is the same thing
-    both = {
-        tuple(r[x] for x in keys): (r["average_precision"], r["ap"])
+    points: dict = {}
+    for r in res["curves"].collect():
+        points.setdefault(tuple(r[k] for k in keys), []).append(
+            (r["recall"], r["confidence"], r["precision_env"], r["is_pad"])
+        )
+    assert any(
+        c == 0.0 and not p for k, pts in points.items() if k[0] == 7
+        for _, c, _, p in pts
+    )
+    got = {
+        tuple(r[k] for k in keys): (r["average_precision"], r["ap"])
         for r in res["ap_both"].collect()
     }
-    for k, (a, g) in both.items():
-        assert a == pytest.approx(want_ap[k], abs=1e-9)
-        assert g == pytest.approx(want_grid[k], abs=1e-9)
+    assert set(got) == set(points)
+    assert [k for k in got if k[0] == 4], "category 4 must reach the curves"
+    for k, pts in points.items():
+        assert got[k] == pytest.approx(_ap_reference(pts), abs=1e-12), k
+        if k[0] == 4:
+            assert got[k] == (0.0, 0.0)
+    # ap and ap_grid are the two columns of ap_both
+    ap = {tuple(r[x] for x in keys): r["average_precision"] for r in res["ap"].collect()}
+    grid = {tuple(r[x] for x in keys): r["ap"] for r in res["ap_grid"].collect()}
+    assert {k: (ap[k], grid[k]) for k in ap} == got
